@@ -9,8 +9,8 @@
 # Usage: scripts/ab_bench.sh [OLD_REF] [OUT_JSON] [PANEL]
 #   OLD_REF  defaults to the last driver round-close commit
 #            (message "round N: verdict/advice/correctness/bench")
-#   OUT_JSON defaults to AB_r16.json
-#   PANEL    defaults to the pinned 13-query panel below
+#   OUT_JSON defaults to AB_r19.json
+#   PANEL    defaults to the pinned 15-query panel below
 # Env knobs:
 #   GRAFT_AB_PASSES        timed passes per query per side (default 3)
 #   GRAFT_AB_ATTEMPTS      max control attempts on drift (default 2)
@@ -56,11 +56,14 @@ if [ ! -f "$WT/.ab_ref" ] || [ "$(cat "$WT/.ab_ref")" != "$OLD_HASH" ]; then
   git worktree add --force "$WT" "$OLD_HASH"
   echo "$OLD_HASH" > "$WT/.ab_ref"
 fi
-# the panel timer itself (this round's tool) rides along into the old
-# build — it only touches SparkEntry.queries, present in both builds
+# the panel timer and its harness (this round's tools) ride along into
+# the old build — they only touch GraftSession.builder and
+# SparkEntry.queries, present in both builds
 mkdir -p "$WT/src/main/scala/graft/tools"
-cp "$REPO/src/main/scala/graft/tools/ABPanel.scala" \
-   "$WT/src/main/scala/graft/tools/ABPanel.scala"
+for f in ABPanel CatalogHarness; do
+  cp "$REPO/src/main/scala/graft/tools/$f.scala" \
+     "$WT/src/main/scala/graft/tools/$f.scala"
+done
 
 # Degraded-divert + retry (r17 directive #4): the r17 panel's per-query
 # noise floor hit ±40% on KNOWN-unchanged queries — fine for

@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 
+import graft.tools.CatalogHarness
+
 /** Benchmark main — runs every SparkEntry.queries entry against
   * SPARK_GRAFT_SF_DIR (min of three timed passes per query) and prints
   * JSON lines: one line per timed pass (per-query times + cumulative
@@ -23,7 +25,7 @@ import org.apache.spark.sql.SparkSession
   *      (spark.sql.codegen.cache.maxEntries, StaticSQLConf); the
   *      catalog holds far more than 100 codegen units, so every pass
   *      janino-recompiles every stage inside its timed window. Fixed:
-  *      maxEntries raised to 10000 below (static conf, fresh JVM).
+  *      maxEntries raised to 10000 in [[graft.tools.CatalogHarness]].
   *  (b) the JIT code cache (default 240m) fills mid-run after 8 catalog
   *      passes and HotSpot disables compilation for the rest of the
   *      JVM's life. Fixed: -XX:ReservedCodeCacheSize=1g in build.sbt.
@@ -248,35 +250,80 @@ object Bench {
     (math.round(waited * 10) / 10.0, first, cur)
   }
 
+  /** The reference's 639 trigger sizes (415 of 16 msgs, then 224 of
+    * 15: exactly 10,000 msgs), each multiplied by `scale`. */
+  def referenceBatchSizes(scale: Int): Seq[Int] =
+    (0 until 639).map(i => (if (i < 415) 16 else 15) * scale)
+
+  /** The reference's headline experiment at one volume: per-trigger
+    * latency of append+latest vs update+earliest over `batchSizes`
+    * feedback messages, after an epoch-0 replay of `backlogRows` rows
+    * ([[graft.streaming.ModesBenchmark]]). `runs` runs; each metric
+    * publishes the MIN of the per-run values (a genuinely slow pipeline
+    * is slow every run, a noisy host isn't) and the means and the
+    * replay also their max/min run spread, which [[gateStreaming]]
+    * reads. Keys are `st_append_<label>_*`,
+    * `st_update_earliest_<label>_*` and `st_<label>_*`; tail
+    * percentiles are there because the 10× mean ran ~1.5× its median
+    * (r14 verdict #8) — GC/state-store pauses land in the tail. Empty
+    * when a run throws. */
+  def streamingAtVolume(spark: SparkSession, label: String,
+      batchSizes: Seq[Int], backlogRows: Int,
+      runs: Int): Map[String, Double] = try {
+    val starts = batchSizes.scanLeft(0)(_ + _)
+    def once(): graft.streaming.ModesBenchmark.Result = {
+      val dir = java.nio.file.Files
+        .createTempDirectory(s"graft_bench_stream_$label")
+      try {
+        val batches = batchSizes.zip(starts).map { case (n, from) =>
+          graft.streaming.FeedbackGenerator.batch("random", from, n)
+        }
+        graft.streaming.ModesBenchmark.run(spark, batches, dir,
+          backlogRows = backlogRows)
+      } finally rmrf(dir)
+    }
+    val results = Seq.fill(runs)(once())
+    def spreadPct(xs: Seq[Double]): Double =
+      math.round((xs.max / math.max(xs.min, 1e-9) - 1) * 1000) / 10.0
+    val appendMeans = results.map(_.append.meanMs)
+    val updateMeans = results.map(_.updateEarliest.meanMs)
+    val replays = results.map(_.epoch0ReplayMs)
+    val append = results.minBy(_.append.meanMs).append
+    val update = results.minBy(_.updateEarliest.meanMs).updateEarliest
+    val (a, u, st) =
+      (s"st_append_$label", s"st_update_earliest_$label", s"st_$label")
+    Map(
+      s"${a}_mean" -> appendMeans.min / 1000.0,
+      s"${a}_mean_spread_pct" -> spreadPct(appendMeans),
+      s"${a}_median" -> append.medianMs / 1000.0,
+      s"${a}_triggers" -> append.n.toDouble,
+      s"${a}_p95" -> append.p95Ms / 1000.0,
+      s"${a}_p99" -> append.p99Ms / 1000.0,
+      s"${u}_mean" -> updateMeans.min / 1000.0,
+      s"${u}_mean_spread_pct" -> spreadPct(updateMeans),
+      s"${u}_median" -> update.medianMs / 1000.0,
+      s"${u}_p95" -> update.p95Ms / 1000.0,
+      s"${u}_p99" -> update.p99Ms / 1000.0,
+      s"${st}_epoch0_replay_sec" -> replays.min / 1000.0,
+      s"${st}_epoch0_replay_sec_spread_pct" -> spreadPct(replays),
+      s"${st}_runs" -> runs.toDouble,
+      s"${st}_msgs" -> batchSizes.sum.toDouble,
+      s"${st}_backlog_rows" -> backlogRows.toDouble)
+  } catch { case _: Throwable => Map.empty }
+
+  // temp hygiene: the streaming A/B checkpoints and the probe corpus
+  // would otherwise leak multi-MB/GB directories per invocation and
+  // eventually fill /tmp across rounds
+  private def rmrf(root: java.nio.file.Path): Unit =
+    if (java.nio.file.Files.exists(root)) {
+      import scala.jdk.CollectionConverters._
+      java.nio.file.Files.walk(root).iterator().asScala.toSeq
+        .reverse.foreach(p => java.nio.file.Files.deleteIfExists(p))
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Static conf; default 100 entries. The 111-query catalog compiles
-      // to several hundred whole-stage-codegen units, so the default LRU
-      // thrashes and re-runs janino for the full catalog on EVERY pass —
-      // inside the timed windows. See the object doc.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // The seventeen plan-audited bounded-census windows each emit a
-    // "WindowExec: No Partition Defined" warning PER EXECUTION; across
-    // 219 queries × ~10 passes that is thousands of identical lines —
-    // they flooded BENCH_r17's driver tail and buried the rc-124
-    // diagnosis (r17 directive #6). Their boundedness is machine-checked
-    // structurally (PlanAuditSpec's SinglePartition-window walk), so in
-    // the bench session the warning carries zero information: raise
-    // this one logger — and only it — to ERROR. After setLogLevel,
-    // which resets the root level only.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
+    val spark = CatalogHarness.session()
 
     // Load-aware start (r18 directive #1a) — BEFORE the budget clock
     // starts: the wait is a recorded preamble, not bench work, so a
@@ -315,38 +362,18 @@ object Bench {
     val ArtifactMarginSec = 60.0
 
     spark.range(1000000).selectExpr("sum(id)").collect()
-    // queries that localCheckpoint shared subplans leave RDD blocks
-    // behind; drop them between queries so storage pressure from one
-    // query never skews another's timing
-    def dropCheckpoints(): Unit =
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
 
     // cumulative janino compilation count for this JVM — the delta
     // across a pass is the number of generated classes that were NOT
     // served from the codegen cache during that pass
     def compiles(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
-    // temp hygiene: the streaming A/B checkpoints and the probe corpus
-    // would otherwise leak multi-MB/GB directories per invocation and
-    // eventually fill /tmp across rounds
-    def rmrf(root: java.nio.file.Path): Unit =
-      if (java.nio.file.Files.exists(root)) {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(root).iterator().asScala.toSeq
-          .reverse.foreach(p => java.nio.file.Files.deleteIfExists(p))
-      }
-
     // Warmup at the smallest SF: measured, this is NOT redundant with
     // the timed passes — dropping it raised the reported min from
     // ~30s to ~39s on a quiet host (C2 JIT and codegen caches need the
     // extra execution to reach steady state across 111 query plans).
     val warmDir = "/root/testdata/sf0.001"
-    SparkEntry.queries.foreach { case (_, fn) =>
-      try fn(spark, warmDir).count()
-      catch { case _: Throwable => () }
-      dropCheckpoints()
-    }
+    SparkEntry.queries.keys.foreach(CatalogHarness.timeOnce(spark, _, warmDir))
     // bucket layout is a one-time data-organization cost (written once,
     // amortized over every later join) — do it in setup so the timed
     // q26 run measures the exchange-free join, not a parquet write
@@ -413,70 +440,15 @@ object Bench {
     // FULL-VOLUME streaming parity (r11 verdict #6): the baseline's
     // published numbers come from 639 triggers / 10,000 msgs (append)
     // and a 146,626-row epoch-0 replay (update+earliest; 6,662.54 ms).
-    // One run at EXACTLY those volumes makes the 2×-faster headline
-    // audit-proof at like-for-like load — batch sizes 16/15 sum to
-    // 10,000 across 639 triggers. Gated to the per-round sf0.1 run.
-    // r13 verdict #4: the full-volume point is the headline
+    // One point at EXACTLY those volumes makes the 2×-faster headline
+    // audit-proof at like-for-like load. Gated to the per-round sf0.1
+    // run. r13 verdict #4 / r18 directive #3: it is the headline
     // baseline-parity number, and a single measurement let a +27%
-    // host-load drift masquerade as a regression. r18 directive #3:
-    // N raised 3 → 5 — publish the MIN of the per-run trigger means
-    // (the same agreeing-evidence rule as the batch bench's
-    // pass_totals — a genuinely slow pipeline is slow five times, a
-    // noisy host isn't) plus the max/min spread so drift is
-    // attributable from the artifact alone.
+    // host-load drift masquerade as a regression — so min-of-5.
     val streamingFull: Map[String, Double] =
       if (!sfDir.endsWith("sf0.1")) Map.empty
-      else try {
-        def once(): graft.streaming.ModesBenchmark.Result = {
-          val dir = java.nio.file.Files
-            .createTempDirectory("graft_bench_stream_full")
-          try {
-            var off = 0
-            val batches = (0 until 639).map { i =>
-              val sz = if (i < 415) 16 else 15
-              val b =
-                graft.streaming.FeedbackGenerator.batch("random", off, sz)
-              off += sz
-              b
-            }
-            graft.streaming.ModesBenchmark.run(spark, batches, dir,
-              backlogRows = 146626)
-          } finally rmrf(dir)
-        }
-        val n = 5
-        val runs = Seq.fill(n)(once())
-        def spreadPct(xs: Seq[Double]): Double =
-          math.round((xs.max / math.max(xs.min, 1e-9) - 1) * 1000) / 10.0
-        val appendMeans = runs.map(_.append.meanMs)
-        val updateMeans = runs.map(_.updateEarliest.meanMs)
-        val best = runs.minBy(_.append.meanMs)
-        Map(
-          "st_append_fullvolume_mean" -> appendMeans.min / 1000.0,
-          "st_append_fullvolume_mean_spread_pct" -> spreadPct(appendMeans),
-          "st_append_fullvolume_median" -> best.append.medianMs / 1000.0,
-          "st_append_fullvolume_triggers" -> best.append.n.toDouble,
-          "st_update_earliest_fullvolume_mean" -> updateMeans.min / 1000.0,
-          "st_update_earliest_fullvolume_mean_spread_pct" ->
-            spreadPct(updateMeans),
-          "st_update_earliest_fullvolume_median" ->
-            runs.minBy(_.updateEarliest.meanMs).updateEarliest
-              .medianMs / 1000.0,
-          "st_append_fullvolume_p95" -> best.append.p95Ms / 1000.0,
-          "st_append_fullvolume_p99" -> best.append.p99Ms / 1000.0,
-          "st_update_earliest_fullvolume_p95" ->
-            runs.minBy(_.updateEarliest.meanMs).updateEarliest
-              .p95Ms / 1000.0,
-          "st_update_earliest_fullvolume_p99" ->
-            runs.minBy(_.updateEarliest.meanMs).updateEarliest
-              .p99Ms / 1000.0,
-          "st_fullvolume_epoch0_replay_sec" ->
-            runs.map(_.epoch0ReplayMs).min / 1000.0,
-          "st_fullvolume_epoch0_replay_sec_spread_pct" ->
-            spreadPct(runs.map(_.epoch0ReplayMs)),
-          "st_fullvolume_runs" -> n.toDouble,
-          "st_fullvolume_msgs" -> 10000.0,
-          "st_fullvolume_backlog_rows" -> 146626.0)
-      } catch { case _: Throwable => Map.empty[String, Double] }
+      else streamingAtVolume(spark, "fullvolume", referenceBatchSizes(1),
+        backlogRows = 146626, runs = 5)
 
     // STREAMING-TWINS EVIDENCE (r18 directive #5): SprtStream and
     // SemDedupStream are spec-proven twins of their batch operators,
@@ -627,11 +599,7 @@ object Bench {
       warmIdx += 1
       val w0 = compiles()
       val t0 = System.nanoTime()
-      SparkEntry.queries.foreach { case (_, fn) =>
-        try fn(spark, sfDir).count()
-        catch { case _: Throwable => () }
-        dropCheckpoints()
-      }
+      SparkEntry.queries.keys.foreach(CatalogHarness.timeOnce(spark, _, sfDir))
       val wt = (System.nanoTime() - t0) / 1e9
       converged = wt >= prevWarm * 0.93
       println(s"""{"metric":"warmup_target_sf_done","idx":$warmIdx,"total":${math.round(wt * 100) / 100.0},"converged":$converged,"codegen_compile_delta":${compiles() - w0}}""")
@@ -650,14 +618,8 @@ object Bench {
     // poison the scale ratios below with false superlinear flags
     def timedPass(dir: String, idx: Int): Map[String, Double] = {
       val c0 = compiles()
-      val pass = SparkEntry.queries.map { case (name, fn) =>
-        val t0 = System.nanoTime()
-        val ok = try { fn(spark, dir).count(); true }
-        catch { case _: Throwable => false }
-        val dt = (System.nanoTime() - t0) / 1e9
-        dropCheckpoints()
-        name -> (if (ok) dt else -1.0)
-      }
+      val pass = SparkEntry.queries.keys
+        .map(n => n -> CatalogHarness.timeOnce(spark, n, dir)).toMap
       // one diagnostic line per pass: the 20 SLOWEST per-query times
       // (capped so several pass lines survive the artifact's fixed
       // stdout-tail budget — r8 lost all but one full pass line to
@@ -677,10 +639,7 @@ object Bench {
       pass
     }
     def minOf(passes: Seq[Map[String, Double]]): Map[String, Double] =
-      passes.head.keys.map { k =>
-        val good = passes.map(_(k)).filter(_ >= 0)
-        k -> (if (good.nonEmpty) good.min else -1.0)
-      }.toMap
+      passes.head.keys.map(k => k -> CatalogHarness.bestOf(passes.map(_(k)))).toMap
     // per-query MEDIAN across passes (r9 item: the sum-of-minima
     // headline sat ~5× below its own best pass total, so minima alone
     // were not an honest throughput figure; the median is robust to one
@@ -778,14 +737,8 @@ object Bench {
             bigPasses.map(_.values.filter(_ >= 0).sum).min +
               ArtifactMarginSec)) Seq.empty
       else (1 to 2).map { i =>
-        val pass = noisyQueries.map { name =>
-          val t0 = System.nanoTime()
-          val ok = try { SparkEntry.queries(name)(spark, sfDir).count(); true }
-          catch { case _: Throwable => false }
-          val dt = (System.nanoTime() - t0) / 1e9
-          dropCheckpoints()
-          name -> (if (ok) dt else -1.0)
-        }.toMap
+        val pass = noisyQueries
+          .map(n => n -> CatalogHarness.timeOnce(spark, n, sfDir)).toMap
         val qs = pass.toSeq.sortBy(_._1)
           .map { case (k, v) => "\"" + k + "\":" + math.round(v * 1000) / 1000.0 }
           .mkString("{", ",", "}")
@@ -800,9 +753,7 @@ object Bench {
       if (sorted.isEmpty) -1.0
       else if (sorted.size % 2 == 1) sorted(sorted.size / 2)
       else (sorted(sorted.size / 2 - 1) + sorted(sorted.size / 2)) / 2.0
-    val results = samples.map { case (k, v) =>
-      k -> (if (v.nonEmpty) v.min else -1.0)
-    }
+    val results = samples.map { case (k, v) => k -> CatalogHarness.bestOf(v) }
     val medians = samples.map { case (k, v) => k -> med(v.sorted) }
     // a query that failed EVERY pass keeps -1 in the min map; it must be
     // reported by name, never summed (r9: 24 silently-erroring queries
@@ -856,16 +807,14 @@ object Bench {
 
 
     // 10× the reference's volume (r12 verdict #5): same 639 triggers,
-    // 10× the rows per trigger (160/150-msg batches summing exactly
-    // 100,000) and a 1,466,260-row epoch-0 replay — one decade of the
-    // latency-vs-volume curve next to the 1× parity point. The 100 TB
-    // claim for ST2/ST3 is that per-trigger latency grows with the
-    // PER-TRIGGER batch, not with how long the stream has been running
-    // — mean/median ~flat vs the 1× run is that evidence.
-    // min-of-2 (same agreeing-evidence rule; 2 not 5 because this run
-    // is ~10× the data of the full-volume point and the 1× point —
-    // run earlier, directly behind the load-aware start — already
-    // anchors the host-noise estimate with N=5)
+    // 10× the rows per trigger (100,000 msgs) and a 1,466,260-row
+    // epoch-0 replay — one decade of the latency-vs-volume curve next
+    // to the 1× parity point. The 100 TB claim for ST2/ST3 is that
+    // per-trigger latency grows with the PER-TRIGGER batch, not with
+    // how long the stream has been running — mean/median ~flat vs the
+    // 1× run is that evidence. min-of-2, not 5: this run is ~10× the
+    // data, and the 1× point — run earlier, directly behind the
+    // load-aware start — already anchors the host-noise estimate.
     val streaming10x: Map[String, Double] =
       if (!sfDir.endsWith("sf0.1")) Map.empty
       // second in the shed order: the 1× full-volume parity point above
@@ -873,61 +822,8 @@ object Bench {
       // decade of the latency-vs-volume curve
       else if (!budget.allow("streaming_10x", Streaming10xEstSec,
           ArtifactMarginSec)) Map.empty
-      else try {
-        def once(): graft.streaming.ModesBenchmark.Result = {
-          val dir = java.nio.file.Files
-            .createTempDirectory("graft_bench_stream_10x")
-          try {
-            var off = 0
-            val batches = (0 until 639).map { i =>
-              val sz = if (i < 415) 160 else 150
-              val b =
-                graft.streaming.FeedbackGenerator.batch("random", off, sz)
-              off += sz
-              b
-            }
-            graft.streaming.ModesBenchmark.run(spark, batches, dir,
-              backlogRows = 1466260)
-          } finally rmrf(dir)
-        }
-        val n = 2
-        val runs = Seq.fill(n)(once())
-        def spreadPct(xs: Seq[Double]): Double =
-          math.round((xs.max / math.max(xs.min, 1e-9) - 1) * 1000) / 10.0
-        val appendMeans = runs.map(_.append.meanMs)
-        val updateMeans = runs.map(_.updateEarliest.meanMs)
-        val best = runs.minBy(_.append.meanMs)
-        Map(
-          "st_append_10x_mean" -> appendMeans.min / 1000.0,
-          "st_append_10x_mean_spread_pct" -> spreadPct(appendMeans),
-          "st_append_10x_median" -> best.append.medianMs / 1000.0,
-          "st_append_10x_triggers" -> best.append.n.toDouble,
-          "st_update_earliest_10x_mean" -> updateMeans.min / 1000.0,
-          "st_update_earliest_10x_mean_spread_pct" ->
-            spreadPct(updateMeans),
-          "st_update_earliest_10x_median" ->
-            runs.minBy(_.updateEarliest.meanMs).updateEarliest
-              .medianMs / 1000.0,
-          // tail percentiles (r14 verdict #8): the 10× mean ran ~1.5×
-          // its median, i.e. tail-dominated — p95/p99 in the artifact
-          // say how heavy that tail is (GC/state-store pauses land
-          // here) instead of leaving the gap to speculation
-          "st_append_10x_p95" -> best.append.p95Ms / 1000.0,
-          "st_append_10x_p99" -> best.append.p99Ms / 1000.0,
-          "st_update_earliest_10x_p95" ->
-            runs.minBy(_.updateEarliest.meanMs).updateEarliest
-              .p95Ms / 1000.0,
-          "st_update_earliest_10x_p99" ->
-            runs.minBy(_.updateEarliest.meanMs).updateEarliest
-              .p99Ms / 1000.0,
-          "st_10x_epoch0_replay_sec" ->
-            runs.map(_.epoch0ReplayMs).min / 1000.0,
-          "st_10x_epoch0_replay_sec_spread_pct" ->
-            spreadPct(runs.map(_.epoch0ReplayMs)),
-          "st_10x_runs" -> n.toDouble,
-          "st_10x_msgs" -> 100000.0,
-          "st_10x_backlog_rows" -> 1466260.0)
-      } catch { case _: Throwable => Map.empty[String, Double] }
+      else streamingAtVolume(spark, "10x", referenceBatchSizes(10),
+        backlogRows = 1466260, runs = 2)
 
     // ONE-OFF sf1-equivalent probe (round-8 stretch item): the scale
     // curve tops out at sf0.1 where fixed overhead dominates, so the
@@ -967,14 +863,8 @@ object Bench {
           .createTempDirectory("graft_bigprobe").toString
         val copies = BigProbeCopies
         graft.tools.ProbeCorpus.generate(spark, sfDir, dir, copies)
-        def probeOnce(n: String): Double = {
-          val t0 = System.nanoTime()
-          val ok = try { SparkEntry.queries(n)(spark, dir).count(); true }
-          catch { case _: Throwable => false }
-          val dt = (System.nanoTime() - t0) / 1e9
-          dropCheckpoints()
-          if (ok) math.round(dt * 1000) / 1000.0 else -1.0
-        }
+        def timeMs(n: String, d: String): Double =
+          math.round(CatalogHarness.timeOnce(spark, n, d) * 1000) / 1000.0
         // EVERY probed query runs twice and keeps its min — the same
         // min-of-N discipline as the salted probes and the timed
         // passes (r14 verdict #1: single-shot probe noise is what
@@ -982,19 +872,15 @@ object Bench {
         // salted curves are deeply sublinear). The first probe of a
         // just-written corpus additionally pays the cold page cache;
         // the second run separates that from the query's real shape.
-        val firstPass = names.map { n =>
-          val t1 = probeOnce(n)
-          val t2 = probeOnce(n)
-          val good = Seq(t1, t2).filter(_ >= 0)
-          n -> (if (good.isEmpty) -1.0 else good.min)
-        }
+        val firstPass =
+          names.map(n => n -> CatalogHarness.bestOf(Seq.fill(2)(timeMs(n, dir))))
         // exceeders after min-of-2 get a THIRD run: a genuinely
         // superlinear query is slow three times, a noisy host isn't
         val times = firstPass.map { case (n, t) =>
           val over = t >= 0 && results.getOrElse(n, -1.0) > 0.0 &&
             t / results(n) > ScaleFlagRatio && t >= 1.0
           n -> (if (over) {
-            val t3 = probeOnce(n)
+            val t3 = timeMs(n, dir)
             if (t3 >= 0) math.min(t, t3) else t
           } else t)
         }
@@ -1012,16 +898,7 @@ object Bench {
         // numerator, while on a quiet host the paired base ≈ the
         // steady-state min and nothing changes.
         val pairedBase: Map[String, Double] = names.map { n =>
-          def baseOnce(): Double = {
-            val t0 = System.nanoTime()
-            val ok = try { SparkEntry.queries(n)(spark, sfDir).count(); true }
-            catch { case _: Throwable => false }
-            val dt = (System.nanoTime() - t0) / 1e9
-            dropCheckpoints()
-            if (ok) math.round(dt * 1000) / 1000.0 else -1.0
-          }
-          val good = Seq(baseOnce(), baseOnce()).filter(_ >= 0)
-          n -> (if (good.isEmpty) -1.0 else good.min)
+          n -> CatalogHarness.bestOf(Seq.fill(2)(timeMs(n, sfDir)))
         }.toMap
         rmrf(java.nio.file.Paths.get(dir))
         // ratio vs max(steady-state min-of-passes, paired base): 10×

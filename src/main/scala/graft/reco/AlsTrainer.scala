@@ -1,5 +1,9 @@
 package graft.reco
 
+import java.nio.file.Files
+
+import org.apache.commons.io.FileUtils
+import org.apache.spark.SparkContext
 import org.apache.spark.ml.evaluation.RegressionEvaluator
 import org.apache.spark.ml.recommendation.{ALS, ALSModel}
 import org.apache.spark.ml.tuning.{ParamGridBuilder, TrainValidationSplit, TrainValidationSplitModel}
@@ -53,8 +57,25 @@ object AlsTrainer {
       .setRatingCol(cfg.ratingCol)
       .setSeed(cfg.seed)
 
-  def train(trainDf: DataFrame, cfg: Config = Config()): ALSModel =
+  def train(trainDf: DataFrame, cfg: Config = Config()): ALSModel = {
+    ensureCheckpointDir(trainDf.sparkSession.sparkContext)
     als(cfg).fit(trainDf)
+  }
+
+  /** ALS's RDD lineage grows with every iteration. Without truncation a
+    * 15-iteration model's tasks can overflow the default 1 MB thread
+    * stack while being serialized (seen in [[rmse]], about once in 25
+    * runs). ALS cuts the lineage every `checkpointInterval` (default 10)
+    * iterations, but only when the SparkContext has a checkpoint
+    * directory: give it one under the JVM temp dir, removed at JVM exit,
+    * unless the caller has set one already. */
+  private def ensureCheckpointDir(sc: SparkContext): Unit = synchronized {
+    if (sc.getCheckpointDir.isEmpty) {
+      val dir = Files.createTempDirectory("graft-als-checkpoint").toFile
+      sys.addShutdownHook(FileUtils.deleteQuietly(dir))
+      sc.setCheckpointDir(dir.getPath)
+    }
+  }
 
   /** RMSE on a holdout — M3 (`RegressionEvaluator`, reference 0.8627). */
   def rmse(model: ALSModel, test: DataFrame,
@@ -79,8 +100,10 @@ object AlsTrainer {
     * equations, not the shuffle shape.
     */
   def trainImplicit(trainDf: DataFrame, cfg: Config = Config(),
-      alpha: Double = 10.0): ALSModel =
+      alpha: Double = 10.0): ALSModel = {
+    ensureCheckpointDir(trainDf.sparkSession.sparkContext)
     als(cfg).setImplicitPrefs(true).setAlpha(alpha).fit(trainDf)
+  }
 
   /** Precision@k of [[topNForAllUsers]] against a ground-truth
     * positives table (userCol, itemCol) — the ranking metric implicit
@@ -115,6 +138,7 @@ object AlsTrainer {
   def tune(df: DataFrame, ranks: Seq[Int], regs: Seq[Double],
       iters: Seq[Int], cfg: Config = Config())
       : TrainValidationSplitModel = {
+    ensureCheckpointDir(df.sparkSession.sparkContext)
     val estimator = als(cfg)
     val grid = new ParamGridBuilder()
       .addGrid(estimator.rank, ranks)

@@ -2,6 +2,7 @@ package graft.reco
 
 import scala.collection.mutable
 
+import org.apache.spark.GraftListenerBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 
@@ -44,11 +45,9 @@ object TrainingMonitor {
     spark.sparkContext.addSparkListener(m)
     try {
       val r = body
-      // listener events are delivered asynchronously; give the bus a
-      // moment to drain (the public API has no waitUntilEmpty)
-      val deadline = System.nanoTime() + 5000000000L
-      while (m.records.isEmpty && System.nanoTime() < deadline)
-        Thread.sleep(50)
+      // listener events are delivered asynchronously: wait until the bus
+      // has handed this monitor every stage the body completed
+      GraftListenerBus.drain(spark.sparkContext)
       (r, m.records)
     } finally spark.sparkContext.removeSparkListener(m)
   }

@@ -1,15 +1,14 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Same-host A/B panel timer — one side of the machine-emitted
   * cross-round control (r15 verdict #1): this host re-times a ~2× drift
   * between sessions, so a committed BENCH artifact from round N−1 is
   * NOT a valid baseline for round N. The control is two ABPanel runs,
   * OLD build and NEW build, back-to-back on the same host in the same
   * hour (scripts/ab_bench.sh orchestrates: git-worktree checkout of the
-  * prior round-close commit, this file dropped in, both sides timed,
-  * results merged into AB_r{N}.json with per-query deltas).
+  * prior round-close commit, this file and [[CatalogHarness]] dropped
+  * in, both sides timed, results merged into AB_r{N}.json with
+  * per-query deltas).
   *
   * Usage: runMain graft.tools.ABPanel <sfDir> <outJson> <label> <q1,..>
   *
@@ -22,36 +21,9 @@ import org.apache.spark.sql.SparkSession
 object ABPanel {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outJson, label, names) = args.take(4)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // bounded-census windows (plan-audited) would otherwise spam one
-    // WindowExec warning per execution across the panel's min-of-N
-    // passes — same silencing as Bench.main (r17 directive #6)
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
-    def drop(): Unit = spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = false))
-    def runOnce(name: String): Double = {
-      val t0 = System.nanoTime()
-      val ok = try {
-        graft.SparkEntry.queries(name)(spark, sfDir).count(); true
-      } catch { case e: Throwable =>
-        System.err.println(s"[ab] $name failed: ${e.getMessage}"); false
-      }
-      val dt = (System.nanoTime() - t0) / 1e9
-      drop()
-      if (ok) math.round(dt * 1000) / 1000.0 else -1.0
-    }
+    val spark = CatalogHarness.session()
+    def runOnce(name: String): Double =
+      math.round(CatalogHarness.timeOnce(spark, name, sfDir) * 1000) / 1000.0
     try {
       val qs = names.split(",").toSeq
       // min-of-N, default 3; GRAFT_AB_PASSES=5 for a settle run (r16
@@ -66,8 +38,7 @@ object ABPanel {
       val rows = qs.map { q =>
         runOnce(q) // warm
         val passes = (1 to nPasses).map(_ => runOnce(q))
-        val good = passes.filter(_ >= 0)
-        val best = if (good.isEmpty) -1.0 else good.min
+        val best = CatalogHarness.bestOf(passes)
         println(s"""{"metric":"ab_query","label":"$label","query":"$q","min_sec":$best,"passes":[${passes.mkString(",")}]}""")
         (q, best, passes)
       }

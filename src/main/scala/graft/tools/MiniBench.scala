@@ -1,14 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Bench-faithful subset timing for optimization A/Bs: same session
   * conf as graft.Bench, same pass structure (all queries per pass, min
-  * across passes), and a real warmup (one sf0.001 pass + `warmPasses`
-  * target-SF passes) so numbers are comparable to bench_full.json's
-  * per_query_min — unlike TimeQueries' per-query loop, where a fresh
-  * JVM's first queries absorb all the JIT/codegen warmup and drown a
-  * 0.2 s change in 1 s of noise.
+  * across passes), and a real warmup (one sf0.001 pass + two target-SF
+  * passes) so numbers are comparable to bench_full.json's
+  * per_query_min — unlike a per-query warm-then-time loop in a fresh
+  * JVM, where the first queries absorb all the JIT/codegen warmup and
+  * drown a 0.2 s change in 1 s of noise.
   *
   * Usage: runMain graft.tools.MiniBench <sfDir> <timedPasses> <q1,...|ALL>
   * Prints one JSON line per query (min/median) plus a total line.
@@ -17,36 +15,16 @@ object MiniBench {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, passesS, names) = args
     val passes = passesS.toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = CatalogHarness.session()
     val qs =
       if (names == "ALL") graft.SparkEntry.queries.keys.toSeq.sorted
       else names.split(",").toSeq
-    def drop(): Unit = spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = false))
-    def pass(dir: String): Map[String, Double] = qs.map { n =>
-      val t0 = System.nanoTime()
-      val ok = try { graft.SparkEntry.queries(n)(spark, dir).count(); true }
-      catch { case _: Throwable => false }
-      drop()
-      n -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
-    }.toMap
+    def pass(dir: String): Map[String, Double] =
+      qs.map(n => n -> CatalogHarness.timeOnce(spark, n, dir)).toMap
     pass("/root/testdata/sf0.001") // codegen/JIT warm at the small SF
     (1 to 2).foreach(_ => pass(sfDir)) // target-SF warm (buffers, JIT tiers)
     val timed = (1 to passes).map(_ => pass(sfDir))
-    val mins = qs.map { n =>
-      val good = timed.map(_(n)).filter(_ >= 0)
-      n -> (if (good.nonEmpty) good.min else -1.0)
-    }
+    val mins = qs.map(n => n -> CatalogHarness.bestOf(timed.map(_(n))))
     mins.foreach { case (n, v) =>
       val med = {
         val g = timed.map(_(n)).filter(_ >= 0).sorted

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Optimization-round plan capture: write each catalog query's
   * `.explain("formatted")` output (AQE FINAL plan — the query is
   * executed first, then the same QueryExecution is explained) to
@@ -12,23 +10,13 @@ import org.apache.spark.sql.SparkSession
   *
   * Usage: runMain graft.tools.PlanDump <sfDir> <outDir> <tag> <q1,q2,...|ALL>
   *
-  * Session conf mirrors graft.Bench so the captured plans are the ones
-  * the bench actually runs.
+  * Runs in [[CatalogHarness.session]], the session graft.Bench uses, so
+  * the captured plans are the ones the bench actually runs.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, tag, names) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = CatalogHarness.session()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     val qs =
       if (names == "ALL") graft.SparkEntry.queries.keys.toSeq.sorted
@@ -56,8 +44,7 @@ object PlanDump {
           println(s"[plandump] $name FAILED ${e.getClass.getSimpleName}: " +
             s"${String.valueOf(e.getMessage).take(160)}")
       }
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      CatalogHarness.dropPersisted(spark)
     }
     spark.stop()
   }

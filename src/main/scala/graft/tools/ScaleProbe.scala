@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Standalone superlinearity probe at an arbitrary corpus multiple —
   * the r11 extension of Bench's in-run 10× probe to a NEW decade
   * (×100 over sf0.1 = sf10-equivalent on documents/embeddings/events).
@@ -33,29 +31,9 @@ object ScaleProbe {
         case _ => (args, None, false)
       }
     val copies = copiesS.toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def drop(): Unit = spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = false))
-    def runOnce(name: String, dir: String): Double = {
-      val t0 = System.nanoTime()
-      val ok = try { graft.SparkEntry.queries(name)(spark, dir).count(); true }
-      catch { case e: Throwable =>
-        System.err.println(s"[probe] $name failed: ${e.getMessage}"); false
-      }
-      val dt = (System.nanoTime() - t0) / 1e9
-      drop()
-      if (ok) math.round(dt * 1000) / 1000.0 else -1.0
-    }
+    val spark = CatalogHarness.session()
+    def runOnce(name: String, dir: String): Double =
+      math.round(CatalogHarness.timeOnce(spark, name, dir) * 1000) / 1000.0
 
     val dir = keepDir.map(java.nio.file.Paths.get(_))
       .getOrElse(java.nio.file.Files.createTempDirectory("graft_scaleprobe"))
@@ -87,10 +65,7 @@ object ScaleProbe {
       val rows = qs.map { q =>
         (1 to 2).foreach(_ => runOnce(q, sfDir))
         val base = runOnce(q, sfDir)
-        val p1 = runOnce(q, dir.toString)
-        val p2 = runOnce(q, dir.toString)
-        val good = Seq(p1, p2).filter(_ >= 0)
-        val probe = if (good.isEmpty) -1.0 else good.min
+        val probe = CatalogHarness.bestOf(Seq.fill(2)(runOnce(q, dir.toString)))
         val ratio =
           if (base > 0 && probe >= 0)
             math.round(probe / math.max(base, 1e-3) * 100) / 100.0

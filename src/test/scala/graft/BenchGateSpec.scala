@@ -1,13 +1,11 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-
 /** The r15 artifact gate: a host-degraded bench run must self-describe
   * (`host_degraded` + culprit pass) and must be UNABLE to overwrite a
   * previous clean full-bench artifact. The r15 driver record —
   * pass totals [112.0, 621.3, 112.8, 206.9] — is the pinned fixture.
   */
-class BenchGateSpec extends AnyFunSuite {
+class BenchGateSpec extends SparkSuite {
 
   test("the r15 degraded run is flagged with its culprit pass") {
     val (degraded, culprit) =
@@ -190,5 +188,38 @@ class BenchGateSpec extends AnyFunSuite {
     assert(math.abs(Bench.best3SpreadPct(r15) - 84.73) < 0.01)
     assert(Bench.best3SpreadPct(Seq(57.0)) == -1.0)
     assert(Bench.best3SpreadPct(Seq.empty) == -1.0)
+  }
+
+  test("streamingAtVolume emits exactly the fullvolume and 10x keys " +
+      "that gateStreaming and the headline read") {
+    assert(Bench.referenceBatchSizes(1).size == 639)
+    assert(Bench.referenceBatchSizes(1).sum == 10000)
+    assert(Bench.referenceBatchSizes(10).sum == 100000)
+    def expected(l: String): Set[String] = Set(
+      s"st_append_${l}_mean", s"st_append_${l}_mean_spread_pct",
+      s"st_append_${l}_median", s"st_append_${l}_triggers",
+      s"st_append_${l}_p95", s"st_append_${l}_p99",
+      s"st_update_earliest_${l}_mean",
+      s"st_update_earliest_${l}_mean_spread_pct",
+      s"st_update_earliest_${l}_median",
+      s"st_update_earliest_${l}_p95", s"st_update_earliest_${l}_p99",
+      s"st_${l}_epoch0_replay_sec", s"st_${l}_epoch0_replay_sec_spread_pct",
+      s"st_${l}_runs", s"st_${l}_msgs", s"st_${l}_backlog_rows")
+    for (label <- Seq("fullvolume", "10x")) {
+      val m = Bench.streamingAtVolume(spark, label, Seq(3, 2, 2),
+        backlogRows = 20, runs = 2)
+      assert(m.keySet == expected(label))
+      assert(m(s"st_${label}_msgs") == 7.0)
+      assert(m(s"st_${label}_runs") == 2.0)
+      assert(m(s"st_${label}_backlog_rows") == 20.0)
+      assert(m(s"st_append_${label}_mean") > 0.0)
+      assert(m(s"st_${label}_epoch0_replay_sec") > 0.0)
+      // the gate flags exactly the three spread-carrying metrics
+      val added = Bench.gateStreaming(m, None).keySet -- m.keySet
+      assert(added.filter(_.endsWith("_degraded")) == Set(
+        s"st_append_${label}_mean_degraded",
+        s"st_update_earliest_${label}_mean_degraded",
+        s"st_${label}_epoch0_replay_sec_degraded"))
+    }
   }
 }

@@ -88,9 +88,9 @@ class SpreadSpec extends SparkSuite {
       val df = spark.range(0, 100, 1, numPartitions = 2).toDF("id")
       Spread.byKey(df, col("id"))
       Spread.acrossCores(df)
-      // listener delivery is async; a real job start would enqueue
-      // within well under this bound
-      Thread.sleep(500)
+      // listener delivery is async: wait until every event posted so
+      // far, a job start included, has reached the listener
+      org.apache.spark.GraftListenerBus.drain(spark.sparkContext)
       assert(jobs.get() === 0,
         s"partition probe launched ${jobs.get()} job(s); it must stay " +
           "a driver-side plan walk")

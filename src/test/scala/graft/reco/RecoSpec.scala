@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import graft.SparkSuite
 import org.apache.spark.ml.recommendation.ALSModel
+import org.apache.spark.sql.functions.col
 
 class RecoSpec extends SparkSuite {
   import spark.implicits._
@@ -179,6 +180,39 @@ class RecoSpec extends SparkSuite {
     // the same labels the reference's REST poller matches
     assert(stages.exists(_.name.contains("ALS.scala")),
       s"no ALS stage in: ${stages.map(_.name).distinct.take(10)}")
+  }
+
+  test("TrainingMonitor returns every stage its body completed") {
+    // a second listener, drained before it is read, is the reference
+    // count: monitored must not return after only the first stages
+    val seen = new java.util.concurrent.atomic.AtomicInteger(0)
+    val reference = new org.apache.spark.scheduler.SparkListener {
+      override def onStageCompleted(
+          e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
+        seen.incrementAndGet()
+    }
+    // earlier suites' events must not reach only the reference listener
+    org.apache.spark.GraftListenerBus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(reference)
+    val (_, stages) = try TrainingMonitor.monitored(spark) {
+      (1 to 3).foreach { i =>
+        spark.range(0, 1000, 1, 4).groupBy((col("id") % i).as("k"))
+          .count().collect()
+      }
+    } finally {
+      org.apache.spark.GraftListenerBus.drain(spark.sparkContext)
+      spark.sparkContext.removeSparkListener(reference)
+    }
+    assert(stages.size >= 3)
+    assert(stages.size == seen.get(),
+      s"monitor saw ${stages.size} stages, the drained listener ${seen.get()}")
+  }
+
+  test("a 15-iteration train checkpoints the factors' lineage") {
+    val model = AlsTrainer.train(AlsTrainer.prepare(ratings),
+      AlsTrainer.Config(rank = 2, maxIter = 15))
+    val lineage = model.itemFactors.rdd.toDebugString
+    assert(lineage.contains("ReliableCheckpointRDD"), lineage)
   }
 
   test("summary/describe profile the prepared ratings (A10)") {
