@@ -2,20 +2,82 @@ package graft.sources
 
 import graft.SparkSuite
 import graft.etl.MovieLens
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Paths}
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.scalatest.BeforeAndAfterAll
 
 /** The custom DataSource V2 must (a) parse byte-for-byte what the
   * Hadoop-text fallback parses — including latin-1 titles, (b) keep
   * row ownership exact across byte-range splits, and (c) actually
   * prune and push down (asserted on the planned scan, not trusted).
+  *
+  * The inputs are generated here, row by row from the index, in the
+  * shapes of FIXTURES.md §1 (`users_raw`, `movies_raw`): `::`-separated,
+  * ISO-8859-1, `\n` line ends, sized like MovieLens-1M.
   */
-class DatSourceSpec extends SparkSuite {
+class DatSourceSpec extends SparkSuite with BeforeAndAfterAll {
 
-  private val usersDat = "/root/reference/datasets/Originales/users.dat"
-  private val moviesDat = "/root/reference/datasets/Originales/movies.dat"
+  private val dir = Files.createTempDirectory("dat_source_fixture")
+
+  private def writeDat(name: String, lines: Seq[String]): String = {
+    val p = dir.resolve(name)
+    Files.write(p, lines.map(_ + "\n").mkString
+      .getBytes(StandardCharsets.ISO_8859_1))
+    p.toString
+  }
+
+  private val ageCodes = Seq(1, 18, 25, 35, 45, 50, 56)
+
+  /** 6,040 users, as in the real file: every age code, every
+    * occupation, zips with leading zeros, ZIP+4, military and
+    * malformed zips. */
+  private val usersDat = writeDat("users.dat", (1 to 6040).map { i =>
+    val zip5 = f"${i * 7919 % 100000}%05d"
+    val zip =
+      if (i % 500 == 0) "09001"
+      else if (i % 331 == 0) s"${i % 100}"
+      else if (i % 277 == 0) s"x$zip5"
+      else if (i % 10 == 0) f"$zip5-${i % 10000}%04d"
+      else zip5
+    s"$i::${if (i % 3 == 0) "F" else "M"}::${ageCodes(i % 7)}::${i % 21}::$zip"
+  })
+
+  private val genres = Seq("Action", "Adventure", "Animation",
+    "Children's", "Comedy", "Crime", "Drama", "Fantasy", "Musical",
+    "Romance", "Thriller")
+
+  private val accented = Seq("Amélie (2001)",
+    "Cité des enfants perdus, La (1995)", "Señorita Extraviada (2001)",
+    "Fête du cinéma, La (1998)", "Smörgåsbord (1983)")
+
+  /** 3,883 movies: id 73 is the real file's line, every 40th title
+    * is accented latin-1, and some rows have no year or an empty
+    * genre segment. */
+  private val moviesDat = writeDat("movies.dat", (1 to 3883).map { i =>
+    val title =
+      if (i % 40 == 0) accented(i / 40 % accented.size)
+      else if (i % 97 == 0) s"Film $i"
+      else s"Film $i (${1919 + i % 81})"
+    val genders =
+      if (i % 89 == 0) "Comedy||Drama"
+      else Seq(genres(i % genres.size), genres(i * 7 % genres.size))
+        .distinct.mkString("|")
+    if (i == 73) "73::Misérables, Les (1995)::Drama|Musical"
+    else s"$i::$title::$genders"
+  })
+
+  override def afterAll(): Unit =
+    try FileUtils.deleteDirectory(dir.toFile)
+    finally super.afterAll()
+
+  /** The reference checkout's MovieLens-1M originals; the parity case
+    * also runs over them wherever they exist. */
+  private val fullDataDir = "/root/reference/datasets/Originales"
 
   private val userSchema = StructType(Seq(
     StructField("id", IntegerType),
@@ -40,7 +102,11 @@ class DatSourceSpec extends SparkSuite {
     }.head.asInstanceOf[DatScan]
 
   test("v2 source matches the Hadoop-text reader row-for-row (latin-1)") {
-    for ((path, schema) <- Seq((usersDat, userSchema), (moviesDat, movieSchema))) {
+    val fullData = Seq((s"$fullDataDir/users.dat", userSchema),
+      (s"$fullDataDir/movies.dat", movieSchema))
+      .filter { case (path, _) => Files.exists(Paths.get(path)) }
+    for ((path, schema) <-
+        Seq((usersDat, userSchema), (moviesDat, movieSchema)) ++ fullData) {
       val legacy = MovieLens.readDat(spark, path, schema)
       val v2 = viaV2(path, schema)
       assert(v2.count() == legacy.count())
@@ -56,7 +122,9 @@ class DatSourceSpec extends SparkSuite {
 
   test("byte-range splits neither drop nor duplicate boundary lines") {
     val one = viaV2(usersDat, userSchema).collect().map(_.toString).sorted
-    // 64 KB floor → the 134 KB file fans out into 3 splits
+    // 64 KB floor → the generated ~134 KB users.dat fans out into 3 splits
+    require(Files.size(Paths.get(usersDat)) > 128 * 1024,
+      "users.dat fixture too small for 3 byte-range splits")
     val many = viaV2(usersDat, userSchema, splitBytes = 1)
     assert(many.rdd.getNumPartitions >= 2, "expected multiple splits")
     assert(many.collect().map(_.toString).sorted.toSeq == one.toSeq)
