@@ -1,10 +1,11 @@
 #!/usr/bin/env python3
 """Machine-visible scale-probe coverage manifest (r12 verdict #6).
 
-Scans every SCALE_PROBE_r*.json (standalone salted-copy probes) and
-bench_full*.json (Bench's in-run 10x salted probe) in the repo root,
-unions the per-query max probed copy factor, and writes
-probe_coverage.json:
+Scans every SCALE_PROBE_r*.json (graft.tools.ScaleProbe runs) and the
+historical `big_probe_*` keys of bench_full*.json (Bench's former
+in-run 10x salted probe, removed since; newer artifacts lack the keys)
+in the repo root, unions the per-query max probed copy factor, and
+writes probe_coverage.json:
 
   {"salted_probed": {query: max_factor, ...},
    "salted_unprobed": [query, ...],
@@ -14,9 +15,7 @@ probe_coverage.json:
 "Unprobed" means NO salted-copy probe beyond sf0.1 — every catalog
 query still has Bench's three-point real-SF curve (sf0.001 -> 0.01 ->
 0.1, a x100 span), which is how family-level superlinearity is caught
-for the long tail. Bench echoes the summary fields into its headline
-JSON so coverage gaps are visible in BENCH_r{N}.json without judge-side
-reconstruction.
+for the long tail. Bench no longer echoes this file; read it directly.
 
 Usage: python3 scripts/probe_coverage.py [repo_root]
 Needs a catalog name list: reads the newest verify dump's

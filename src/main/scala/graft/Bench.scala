@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 
@@ -36,6 +37,25 @@ import graft.tools.CatalogHarness
   */
 object Bench {
 
+  /** (max−min)/min percent spread of the three fastest totals — ONE
+    * definition for the published `pass_spread_best3_pct` and the
+    * `host_degraded` verdict derived from it, so they cannot
+    * desynchronize. -1 on degenerate inputs.
+    */
+  def best3SpreadPct(passTotals: Seq[Double]): Double = {
+    val best3 = passTotals.sorted.take(3)
+    if (best3.size < 2 || best3.min <= 0) -1.0
+    else (best3.max - best3.min) / best3.min * 100.0
+  }
+
+  /** (max−min)/min percent spread of ALL pass totals — ONE definition
+    * for the published `pass_spread_pct` and the `culprit_pass` trigger
+    * in [[degradedVerdict]]. -1 on degenerate inputs.
+    */
+  def passSpreadPct(passTotals: Seq[Double]): Double =
+    if (passTotals.size < 2 || passTotals.min <= 0) -1.0
+    else (passTotals.max - passTotals.min) / passTotals.min * 100.0
+
   /** Host-noise verdict over the timed target-SF pass totals (r15
     * verdict #2/#6 — BENCH_r15's driver run published pass totals
     * [112.0, 621.3, 112.8, 206.9] as a round record):
@@ -50,24 +70,12 @@ object Bench {
     *    instead of diffing four per-pass maps; -1 when no pass stands
     *    out.
     */
-  /** (max−min)/min percent spread of the three fastest totals — ONE
-    * definition for the published `pass_spread_best3_pct` and the
-    * `host_degraded` verdict derived from it, so they cannot
-    * desynchronize. -1 on degenerate inputs.
-    */
-  def best3SpreadPct(passTotals: Seq[Double]): Double = {
-    val best3 = passTotals.sorted.take(3)
-    if (best3.size < 2 || best3.min <= 0) -1.0
-    else (best3.max - best3.min) / best3.min * 100.0
-  }
-
   def degradedVerdict(passTotals: Seq[Double],
       barPct: Double = 15.0): (Boolean, Int) = {
-    val allSpread =
-      if (passTotals.size < 2 || passTotals.min <= 0) -1.0
-      else (passTotals.max - passTotals.min) / passTotals.min * 100.0
     val culprit =
-      if (allSpread > 10.0) passTotals.indexOf(passTotals.max) + 1 else -1
+      if (passSpreadPct(passTotals) > 10.0)
+        passTotals.indexOf(passTotals.max) + 1
+      else -1
     (best3SpreadPct(passTotals) > barPct, culprit)
   }
 
@@ -280,7 +288,7 @@ object Bench {
         }
         graft.streaming.ModesBenchmark.run(spark, batches, dir,
           backlogRows = backlogRows)
-      } finally rmrf(dir)
+      } finally FileUtils.deleteQuietly(dir.toFile)
     }
     val results = Seq.fill(runs)(once())
     def spreadPct(xs: Seq[Double]): Double =
@@ -311,16 +319,6 @@ object Bench {
       s"${st}_backlog_rows" -> backlogRows.toDouble)
   } catch { case _: Throwable => Map.empty }
 
-  // temp hygiene: the streaming A/B checkpoints and the probe corpus
-  // would otherwise leak multi-MB/GB directories per invocation and
-  // eventually fill /tmp across rounds
-  private def rmrf(root: java.nio.file.Path): Unit =
-    if (java.nio.file.Files.exists(root)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(root).iterator().asScala.toSeq
-        .reverse.foreach(p => java.nio.file.Files.deleteIfExists(p))
-    }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = CatalogHarness.session()
@@ -349,16 +347,14 @@ object Bench {
     // driver bench (57:16 total) and the r17/r18 builder closes: the
     // mandatory streaming blocks (warm once + N=5 A/B + N=5
     // full-volume) ~8 min, the sf0.001 twins parity block ~1.5 min,
-    // the 10× volume point ~4 min, the big-probe sweep (corpus
-    // generation + min-of-2 probes + paired bases) ~10 min. Estimates,
-    // not caps — a block that starts is never killed mid-flight; the
-    // budget decides only whether it STARTS.
+    // the 10× volume point ~4 min. Estimates, not caps — a block that
+    // starts is never killed mid-flight; the budget decides only
+    // whether it STARTS.
     // (the mandatory streaming blocks need no cost constant anymore:
     // they run FIRST — r18 directive #3 — so no later gate reserves
     // for them)
     val TwinsEstSec = 90.0
     val Streaming10xEstSec = 240.0
-    val BigProbeEstSec = 600.0
     val ArtifactMarginSec = 60.0
 
     spark.range(1000000).selectExpr("sum(id)").collect()
@@ -415,7 +411,7 @@ object Bench {
           val res = graft.streaming.ModesBenchmark.run(spark, batches, dir,
             backlogFactor = 15)
           (res.append.meanMs, res.updateEarliest.meanMs)
-        } finally rmrf(dir)
+        } finally FileUtils.deleteQuietly(dir.toFile)
       }
       once() // untimed streaming-path warmup, result discarded
       val n = 5
@@ -673,8 +669,8 @@ object Bench {
       val totals = three.map(_.values.filter(_ >= 0).sum)
       if (three.size == 3 && totals.min > 0 &&
           (totals.max - totals.min) / totals.min > 0.10 &&
-          // extra passes outrank the 10× streaming and the probe (which
-          // are deliberately NOT reserved here) but must not eat the
+          // extra passes outrank the 10× streaming (which is
+          // deliberately NOT reserved here) but must not eat the
           // scale-ratio passes
           budget.allow("extra_pass", totals.min,
             totals.min + ArtifactMarginSec)) {
@@ -730,7 +726,7 @@ object Bench {
     val extraPasses: Seq[Map[String, Double]] =
       if (noisyQueries.isEmpty ||
           // same rank as the 4th pass: reserve the mandatory remainder
-          // (the scale passes), never the 10×/probe below it
+          // (the scale passes), never the 10× streaming below it
           !budget.allow("noisy_repass",
             2 * noisyQueries.map(k =>
               bigPasses.map(_(k)).filter(_ >= 0).max).sum,
@@ -775,10 +771,6 @@ object Bench {
     // false-alarm, while anything genuinely superlinear (which IS slow
     // at the big SF by definition) cannot hide.
     val ScaleFlagRatio = 15.0
-    // in-run probe corpus multiple — emitted into both artifacts so a
-    // cross-run flag difference is attributable to probe config, not
-    // guessed at (r11 verdict #8)
-    val BigProbeCopies = 10
     def siblingDir(suffix: String): String =
       if (sfDir.endsWith("sf0.1")) sfDir.stripSuffix("sf0.1") + suffix else ""
     val midDir = sys.env.getOrElse("SPARK_GRAFT_SCALE_CHECK_DIR", siblingDir("sf0.01"))
@@ -805,7 +797,6 @@ object Bench {
       .filter { case (k, r) => r > ScaleFlagRatio && results(k) >= 1.0 }
       .keys.toSeq.sorted
 
-
     // 10× the reference's volume (r12 verdict #5): same 639 triggers,
     // 10× the rows per trigger (100,000 msgs) and a 1,466,260-row
     // epoch-0 replay — one decade of the latency-vs-volume curve next
@@ -817,116 +808,13 @@ object Bench {
     // load-aware start — already anchors the host-noise estimate.
     val streaming10x: Map[String, Double] =
       if (!sfDir.endsWith("sf0.1")) Map.empty
-      // second in the shed order: the 1× full-volume parity point above
+      // first in the shed order: the 1× full-volume parity point above
       // is the headline number and always runs; this is the extra
-      // decade of the latency-vs-volume curve
+      // decade of the latency-vs-volume curve, reserved by nothing
       else if (!budget.allow("streaming_10x", Streaming10xEstSec,
           ArtifactMarginSec)) Map.empty
       else streamingAtVolume(spark, "10x", referenceBatchSizes(10),
         backlogRows = 1466260, runs = 2)
-
-    // ONE-OFF sf1-equivalent probe (round-8 stretch item): the scale
-    // curve tops out at sf0.1 where fixed overhead dominates, so the
-    // worst measured big/mid ratios get one more decade of data — 10
-    // deterministic salted copies of sf0.1 documents/embeddings/events
-    // via graft.tools.ProbeCorpus (see its doc for the salting design;
-    // the standalone graft.tools.ScaleProbe pushes the same corpus to
-    // 100× for the named heavy families). Only queries over these
-    // three tables are probed (the TPC-H side has no generator here);
-    // each runs ONCE — this is a probe for superlinearity, not a
-    // steady-state timing.
-    val (probeFlagged, probeTimes, probeRatios, probePairedBase):
-        (Seq[String], Seq[(String, Double)], Seq[(String, Double)],
-          Seq[(String, Double)]) = (try {
-      val prefixes = Seq("text_", "dedup_", "emb_", "embedding_", "ann_",
-        "pipe_", "mm_", "ev_", "graph_event_")
-      val worst = bigMidRatios.toSeq.sortBy(-_._2).take(10).map(_._1)
-      // the stateful events family never surfaces in the worst-ratio set
-      // (its sf0.1 times are small), so it would otherwise NEVER get a
-      // measured 10× point — force one funnel and one sessionize probe
-      // (r9 advice #7) alongside whatever the ratios flag; r10 verdict
-      // #8 additionally pins the three queries with the worst MEASURED
-      // 10×-data ratios so their extra decade is always in the artifact
-      val forced = Seq("ev_funnel", "ev_sessionize",
-        "text_substring_dedup", "text_dup_spans", "text_dsir_weight")
-        .filter(SparkEntry.queries.contains)
-      val names =
-        (worst.filter(n => prefixes.exists(n.startsWith)) ++ forced).distinct
-      if (names.isEmpty || !sfDir.endsWith("sf0.1")) None
-      // first in the shed order: pure extra-decade evidence, never a
-      // headline input — the cheapest block to lose, so nothing above
-      // reserves for it and it starves before anything else
-      else if (!budget.allow("big_probe", BigProbeEstSec,
-          ArtifactMarginSec)) None
-      else {
-        val dir = java.nio.file.Files
-          .createTempDirectory("graft_bigprobe").toString
-        val copies = BigProbeCopies
-        graft.tools.ProbeCorpus.generate(spark, sfDir, dir, copies)
-        def timeMs(n: String, d: String): Double =
-          math.round(CatalogHarness.timeOnce(spark, n, d) * 1000) / 1000.0
-        // EVERY probed query runs twice and keeps its min — the same
-        // min-of-N discipline as the salted probes and the timed
-        // passes (r14 verdict #1: single-shot probe noise is what
-        // produced the contradictory 18× flags on queries whose ×100
-        // salted curves are deeply sublinear). The first probe of a
-        // just-written corpus additionally pays the cold page cache;
-        // the second run separates that from the query's real shape.
-        val firstPass =
-          names.map(n => n -> CatalogHarness.bestOf(Seq.fill(2)(timeMs(n, dir))))
-        // exceeders after min-of-2 get a THIRD run: a genuinely
-        // superlinear query is slow three times, a noisy host isn't
-        val times = firstPass.map { case (n, t) =>
-          val over = t >= 0 && results.getOrElse(n, -1.0) > 0.0 &&
-            t / results(n) > ScaleFlagRatio && t >= 1.0
-          n -> (if (over) {
-            val t3 = timeMs(n, dir)
-            if (t3 >= 0) math.min(t, t3) else t
-          } else t)
-        }
-        // PAIRED base (the r14 18× postmortem): the probe runs many
-        // minutes after the timed passes that produced `results`, so
-        // sustained host contention in the probe's window inflated
-        // probe/base multiplicatively — both r14 "flags" re-measured
-        // at 1.5×/2.4× under ScaleProbe's paired protocol, and the
-        // data volumes involved (sf0.1: 5k docs, 265k bigram
-        // instances, <1k distinct bigrams — megabytes) rule out any
-        // spill mechanism. Re-time the base at sf0.1 NOW, under the
-        // probe's own host conditions (min-of-2, same rule), and use
-        // the larger of steady-state and paired base as denominator:
-        // a loaded host inflates both sides instead of just the
-        // numerator, while on a quiet host the paired base ≈ the
-        // steady-state min and nothing changes.
-        val pairedBase: Map[String, Double] = names.map { n =>
-          n -> CatalogHarness.bestOf(Seq.fill(2)(timeMs(n, sfDir)))
-        }.toMap
-        rmrf(java.nio.file.Paths.get(dir))
-        // ratio vs max(steady-state min-of-passes, paired base): 10×
-        // data, same 15× flag bar as the main scale check
-        val ratios = times.collect {
-          case (n, t) if t >= 0 && results.getOrElse(n, -1.0) > 0.0 =>
-            val base = math.max(results(n), pairedBase.getOrElse(n, -1.0))
-            n -> math.round(t / base * 100) / 100.0
-        }
-        // same absolute-time floor as the main scale check: a
-        // sub-second query whose fixed overhead jumps on the cold,
-        // just-written probe corpus must not false-alarm; anything
-        // genuinely superlinear is slow at 10× by definition
-        val probeTime = times.toMap
-        val flagged = ratios.filter { case (n, r) =>
-          r > ScaleFlagRatio && probeTime(n) >= 1.0
-        }.map(_._1)
-        def js(m: Seq[(String, Double)]): String =
-          m.sortBy(_._1).map { case (k, v) => "\"" + k + "\":" + v }
-            .mkString("{", ",", "}")
-        val skipped = worst.filterNot(names.contains)
-          .map("\"" + _ + "\"").mkString("[", ",", "]")
-        println(s"""{"metric":"big_probe","scale":"10x sf0.1 (sf1-equivalent)","copies":$copies,"scaled_tables":["documents","embeddings","events"],"flag_threshold":$ScaleFlagRatio,"flagged":${flagged.map("\"" + _ + "\"").mkString("[", ",", "]")},"skipped_tpch_side":$skipped,"times_sec":${js(times)},"paired_base_sec":${js(pairedBase.toSeq)},"ratio_vs_sf01":${js(ratios)}}""")
-        Some((flagged, times, ratios, pairedBase.toSeq))
-      }
-    } catch { case _: Throwable => None })
-      .getOrElse((Seq.empty[String], Seq.empty[(String, Double)],
-        Seq.empty[(String, Double)], Seq.empty[(String, Double)]))
 
     // r16 verdict #2: per-metric degraded verdicts for the streaming
     // block — the prior artifact is read BEFORE this run overwrites it
@@ -981,7 +869,6 @@ object Bench {
       .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
     val flJson = flagged.map("\"" + _ + "\"").mkString("[", ",", "]")
     val ptJson = passTotals.mkString("[", ",", "]")
-    val pbJson = probeFlagged.map("\"" + _ + "\"").mkString("[", ",", "]")
     // per-query medians on their own line (ahead of the headline so the
     // headline stays LAST; if stdout-tail truncation eats this line the
     // median_total on the headline still survives)
@@ -996,8 +883,8 @@ object Bench {
     val fqJson = failedQueries.map("\"" + _ + "\"").mkString("[", ",", "]")
     val nqJson = noisyQueries.map("\"" + _ + "\"").mkString("[", ",", "]")
     // every optional block the budget refused, in refusal order — an
-    // artifact missing its probe/10× sections must say WHY from its
-    // own bytes (all gated blocks have run or been refused by here)
+    // artifact missing its 10× section must say WHY from its own bytes
+    // (all gated blocks have run or been refused by here)
     val shedJson = budget.shed.map("\"" + _ + "\"").mkString("[", ",", "]")
     // the core's own recorded degradation (r18 directive #2) — distinct
     // from budget_shed: these are MANDATORY blocks given up mid-run
@@ -1007,10 +894,10 @@ object Bench {
     // quiet host lands ≲10%; ambient driver load shows up here instead
     // of silently inflating whichever pass it hit (the r9 verdict's
     // 46.9→31.9 "warmup" was mostly this).
-    val spreadPct =
-      if (passTotals.size < 2 || passTotals.min <= 0) -1.0
-      else math.round((passTotals.max - passTotals.min) / passTotals.min
-        * 1000) / 10.0
+    val spreadPct = {
+      val s = passSpreadPct(passTotals)
+      if (s < 0) -1.0 else math.round(s * 10) / 10.0
+    }
     // spread of the three FASTEST pass totals: when the >10% trigger
     // above bought a 4th pass, this is the reproducibility of the
     // engine once the one host-noise outlier pass is set aside — the
@@ -1027,53 +914,7 @@ object Bench {
     val (hostDegraded, culpritPass) = degradedVerdict(passTotals)
     if (hostDegraded)
       println(s"""{"metric":"host_degraded","pass_totals":$ptJson,"culprit_pass":$culpritPass,"best3_spread_bar_pct":15.0}""")
-    // salted-probe coverage manifest (r12 verdict #6): echo the summary
-    // of probe_coverage.json (regenerated by scripts/probe_coverage.py
-    // from every SCALE_PROBE_r*/bench_full* artifact) so which queries
-    // have NO salted-copy curve — and how far each family has been
-    // pushed — is visible in BENCH_r{N}.json without reconstruction.
-    // Every catalog query always has this run's three-point real-SF
-    // curve regardless; missing file → "{}" rather than a crash.
-    val probeCoverage: String = try {
-      val txt = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("probe_coverage.json")), "UTF-8")
-      def grab(key: String): String = {
-        val i = txt.indexOf("\"" + key + "\"")
-        if (i < 0) "null"
-        else {
-          val start = txt.indexOf(':', i) + 1
-          var depth = 0; var j = start; var done = false
-          var s = -1; var e = -1
-          while (j < txt.length && !done) {
-            val c = txt.charAt(j)
-            if (c == '{' || c == '[') { if (depth == 0) s = j; depth += 1 }
-            else if (c == '}' || c == ']') {
-              depth -= 1; if (depth == 0) { e = j; done = true }
-            }
-            j += 1
-          }
-          if (s >= 0 && e > s) txt.substring(s, e + 1).replaceAll("\\s+", "")
-          else "null"
-        }
-      }
-      val unprobed = grab("salted_unprobed")
-      val perFam = grab("max_factor_per_family")
-      val cnt =
-        if (unprobed == "null") -1
-        else unprobed.count(_ == '"') / 2
-      s""""salted_unprobed_count":$cnt,"max_factor_per_family":$perFam,"salted_unprobed":$unprobed"""
-    } catch { case _: Throwable =>
-      """"salted_unprobed_count":-1,"max_factor_per_family":{},"salted_unprobed":[]"""
-    }
-    println(s"""{"metric":"probe_coverage",$probeCoverage}""")
-    // headline-safe short form (the full unprobed list would blow the
-    // tail budget): count + per-family max factor only
-    val probeCoverageSummary: String = {
-      val i = probeCoverage.indexOf(""""salted_unprobed":""")
-      val short = if (i < 0) probeCoverage else probeCoverage.substring(0, i)
-      if (short.endsWith(",")) short else short + ","
-    }
-    println(s"""{"metric":"total","value":$total,"unit":"sec","median_total":$medianTotal,"catalog_size":${SparkEntry.queries.size},"bench_ok":${results.count(_._2 >= 0)},"failed_count":${failedQueries.size},"failed":$fqJson,"st_append_trigger_mean":$stAppend,"st_append_trigger_stddev":$stAppendSd,"st_update_earliest_trigger_mean":$stUpdate,"st_update_earliest_trigger_stddev":$stUpdateSd,"st_trigger_runs":$stN,"sf":"$sfDir","scale_flagged":${flagged.size},"flagged":$flJson,"worst_scale_ratios":$worst10,"big_probe_flagged":$pbJson,"big_probe_copies":$BigProbeCopies,"big_probe_flag_threshold":$ScaleFlagRatio,"noisy_queries":$nqJson,"st_degraded":$stDegradedJson,"st_append_fullvolume_mean":${streamingFullG.getOrElse("st_append_fullvolume_mean", -1.0)},"st_append_fullvolume_mean_spread_pct":${streamingFullG.getOrElse("st_append_fullvolume_mean_spread_pct", -1.0)},"st_update_earliest_fullvolume_mean":${streamingFullG.getOrElse("st_update_earliest_fullvolume_mean", -1.0)},"st_update_earliest_fullvolume_mean_spread_pct":${streamingFullG.getOrElse("st_update_earliest_fullvolume_mean_spread_pct", -1.0)},"st_fullvolume_epoch0_replay_sec":${streamingFullG.getOrElse("st_fullvolume_epoch0_replay_sec", -1.0)},"st_fullvolume_runs":${streamingFullG.getOrElse("st_fullvolume_runs", 0.0).toInt},"st_append_10x_mean":${streaming10xG.getOrElse("st_append_10x_mean", -1.0)},"st_append_10x_mean_spread_pct":${streaming10xG.getOrElse("st_append_10x_mean_spread_pct", -1.0)},"st_update_earliest_10x_mean":${streaming10xG.getOrElse("st_update_earliest_10x_mean", -1.0)},"st_update_earliest_10x_mean_spread_pct":${streaming10xG.getOrElse("st_update_earliest_10x_mean_spread_pct", -1.0)},"st_10x_epoch0_replay_sec":${streaming10xG.getOrElse("st_10x_epoch0_replay_sec", -1.0)},"st_10x_runs":${streaming10xG.getOrElse("st_10x_runs", 0.0).toInt},${probeCoverageSummary}"pass_totals_big_sf":$ptJson,"pass_spread_pct":$spreadPct,"pass_spread_best3_pct":$spreadBest3Pct,"host_degraded":$hostDegraded,"culprit_pass":$culpritPass,"host_degraded_pre_retry":$hostDegradedPreRetry,"degraded_retry":${if (degradedRetried) 1 else 0},"core_shed":$coreShedJson,"load_waited_sec":$loadWaitedSec,"load_at_start":$loadAtStart,"st_twin_sprt_parity":${stTwins.getOrElse("st_twin_sprt_parity", -1.0)},"st_twin_sprt_trigger_sec":${stTwins.getOrElse("st_twin_sprt_trigger_sec", -1.0)},"st_twin_semdedup_parity":${stTwins.getOrElse("st_twin_semdedup_parity", -1.0)},"st_twin_semdedup_trigger_sec":${stTwins.getOrElse("st_twin_semdedup_trigger_sec", -1.0)},"st_twin_ingest_parity":${stTwins.getOrElse("st_twin_ingest_parity", -1.0)},"st_twin_ingest_trigger_sec":${stTwins.getOrElse("st_twin_ingest_trigger_sec", -1.0)},"budget_sec":${budget.budgetSec},"budget_elapsed_sec":${math.round(budget.elapsedSec)},"budget_shed":$shedJson,"codegen_compiles_total":${compiles()}}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","median_total":$medianTotal,"catalog_size":${SparkEntry.queries.size},"bench_ok":${results.count(_._2 >= 0)},"failed_count":${failedQueries.size},"failed":$fqJson,"st_append_trigger_mean":$stAppend,"st_append_trigger_stddev":$stAppendSd,"st_update_earliest_trigger_mean":$stUpdate,"st_update_earliest_trigger_stddev":$stUpdateSd,"st_trigger_runs":$stN,"sf":"$sfDir","scale_flagged":${flagged.size},"flagged":$flJson,"worst_scale_ratios":$worst10,"noisy_queries":$nqJson,"st_degraded":$stDegradedJson,"st_append_fullvolume_mean":${streamingFullG.getOrElse("st_append_fullvolume_mean", -1.0)},"st_append_fullvolume_mean_spread_pct":${streamingFullG.getOrElse("st_append_fullvolume_mean_spread_pct", -1.0)},"st_update_earliest_fullvolume_mean":${streamingFullG.getOrElse("st_update_earliest_fullvolume_mean", -1.0)},"st_update_earliest_fullvolume_mean_spread_pct":${streamingFullG.getOrElse("st_update_earliest_fullvolume_mean_spread_pct", -1.0)},"st_fullvolume_epoch0_replay_sec":${streamingFullG.getOrElse("st_fullvolume_epoch0_replay_sec", -1.0)},"st_fullvolume_runs":${streamingFullG.getOrElse("st_fullvolume_runs", 0.0).toInt},"st_append_10x_mean":${streaming10xG.getOrElse("st_append_10x_mean", -1.0)},"st_append_10x_mean_spread_pct":${streaming10xG.getOrElse("st_append_10x_mean_spread_pct", -1.0)},"st_update_earliest_10x_mean":${streaming10xG.getOrElse("st_update_earliest_10x_mean", -1.0)},"st_update_earliest_10x_mean_spread_pct":${streaming10xG.getOrElse("st_update_earliest_10x_mean_spread_pct", -1.0)},"st_10x_epoch0_replay_sec":${streaming10xG.getOrElse("st_10x_epoch0_replay_sec", -1.0)},"st_10x_runs":${streaming10xG.getOrElse("st_10x_runs", 0.0).toInt},"pass_totals_big_sf":$ptJson,"pass_spread_pct":$spreadPct,"pass_spread_best3_pct":$spreadBest3Pct,"host_degraded":$hostDegraded,"culprit_pass":$culpritPass,"host_degraded_pre_retry":$hostDegradedPreRetry,"degraded_retry":${if (degradedRetried) 1 else 0},"core_shed":$coreShedJson,"load_waited_sec":$loadWaitedSec,"load_at_start":$loadAtStart,"st_twin_sprt_parity":${stTwins.getOrElse("st_twin_sprt_parity", -1.0)},"st_twin_sprt_trigger_sec":${stTwins.getOrElse("st_twin_sprt_trigger_sec", -1.0)},"st_twin_semdedup_parity":${stTwins.getOrElse("st_twin_semdedup_parity", -1.0)},"st_twin_semdedup_trigger_sec":${stTwins.getOrElse("st_twin_semdedup_trigger_sec", -1.0)},"st_twin_ingest_parity":${stTwins.getOrElse("st_twin_ingest_parity", -1.0)},"st_twin_ingest_trigger_sec":${stTwins.getOrElse("st_twin_ingest_trigger_sec", -1.0)},"budget_sec":${budget.budgetSec},"budget_elapsed_sec":${math.round(budget.elapsedSec)},"budget_shed":$shedJson,"codegen_compiles_total":${compiles()}}""")
     // FULL machine-readable artifact (r10 verdict item #2): stdout-tail
     // truncation eats the long per-query maps, so everything a verdict
     // needs to diff round-over-round — every per-query min AND median,
@@ -1101,13 +942,8 @@ object Bench {
            |"per_query_min_small_sf":${jm(small)},
            |"scale_ratio_big_mid":${jm(bigMidRatios)},
            |"scale_ratio_mid_small":${jm(midSmallRatios)},
-           |"scale_flagged":$flJson,"big_probe_flagged":$pbJson,
-           |"big_probe_copies":$BigProbeCopies,
-           |"big_probe_flag_threshold":$ScaleFlagRatio,
+           |"scale_flagged":$flJson,
            |"noisy_queries":$nqJson,
-           |"big_probe_times_sec":${jm(probeTimes.toMap)},
-           |"big_probe_paired_base_sec":${jm(probePairedBase.toMap)},
-           |"big_probe_ratio_vs_sf01":${jm(probeRatios.toMap)},
            |"streaming":${jm(streaming ++ streamingFullG ++ streaming10xG)},"st_degraded":$stDegradedJson,
            |"st_twins":${jm(stTwins)},
            |"core_shed":$coreShedJson,
@@ -1115,7 +951,6 @@ object Bench {
            |"degraded_retry":${if (degradedRetried) 1 else 0},
            |"load_waited_sec":$loadWaitedSec,
            |"load_at_start":$loadAtStart,"load_after_wait":$loadAfterWait,
-           |"probe_coverage":{$probeCoverage},
            |"budget_sec":${budget.budgetSec},
            |"budget_elapsed_sec":${math.round(budget.elapsedSec)},
            |"budget_shed":$shedJson,
@@ -1165,9 +1000,10 @@ object Bench {
   * Shed priority under a tightening budget (r17 directive #1's order)
   * is enforced by WHAT each gate reserves, not by a scheduler: every
   * gate reserves only the MANDATORY blocks still ahead of it, never a
-  * lower-priority optional block — so the big probe (reserved by
-  * nothing) starves first, then the 10× streaming volume, then the
-  * extra/noisy passes, then the adaptive-warmup refinement.
+  * lower-priority optional block — so the 10× streaming volume
+  * (reserved by nothing) starves first, then the extra/noisy passes,
+  * then the adaptive-warmup refinement. Superlinearity probes beyond
+  * sf0.1 are a separate step: [[graft.tools.ScaleProbe]].
   *
   * @param budgetSec total wall-clock allowance, measured from
   *                  construction (main constructs this first thing)

@@ -87,20 +87,15 @@ object FoldInRecommender {
           r.getAs[scala.collection.Seq[Float]](1).map(_.toDouble).toArray)
       }
       .sortBy(_._1)
-    val ids = factorRows.map(_._1)
-    val rank = factorRows.head._2.length
-    val mat = DenseMatrix.zeros[Double](ids.length, rank)
-    factorRows.zipWithIndex.foreach { case ((_, f), i) =>
-      (0 until rank).foreach(j => mat(i, j) = f(j))
-    }
     // filmId may be int or long (the reference's pandas-written parquet
     // upcasts to long — SURVEY §1.3)
     val titles = movies.select("filmId", "film").collect()
       .map(r => r.getAs[Number](0).intValue() -> r.getString(1)).toMap
-    Model(ids, mat, titles)
+    fromFactors(factorRows.map(_._1), factorRows.map(_._2), titles)
   }
 
-  /** Build directly from raw arrays (tests / pre-exported factors). */
+  /** Build directly from raw arrays: [[fromModel]]'s id-sorted
+    * factors, tests, pre-exported factors. */
   def fromFactors(ids: Array[Int], rows: Array[Array[Double]],
       titles: Map[Int, String]): Model = {
     val rank = rows.head.length

@@ -1,5 +1,7 @@
 package graft.sources
 
+import java.nio.file.{Files, Path}
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -18,8 +20,18 @@ import graft.core.Tables
   */
 object DatSourceQueries {
 
+  /** One round-trip root per JVM, removed at exit. The returned
+    * DataFrame reads its text files lazily, so an execution cannot
+    * delete its own directory; each writes a fresh subdirectory here
+    * instead of a new top-level temp dir. */
+  private lazy val roundTripRoot: Path = {
+    val root = Files.createTempDirectory("graft_dat_rt")
+    sys.addShutdownHook(FileUtils.deleteQuietly(root.toFile))
+    root
+  }
+
   def q56DatSource(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_dat_rt")
+    val dir = Files.createTempDirectory(roundTripRoot, "run")
       .resolve("customer_dat").toString
     Tables.customer(spark, sfDir)
       .select(concat_ws("::",

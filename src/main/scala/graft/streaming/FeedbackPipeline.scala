@@ -69,10 +69,10 @@ object FeedbackPipeline {
       .foreachBatch(fn)
       .start()
 
-  /** Aggregated live counts in update mode — the engine-side version of
-    * the dashboards' per-request `value_counts` (SURVEY §2.4 A8 moved
-    * into Spark): stateful streaming count per key, only changed rows
-    * emitted per trigger.
+  /** Aggregated live counts in complete mode — the engine-side version
+    * of the dashboards' per-request `value_counts` (SURVEY §2.4 A8
+    * moved into Spark): stateful streaming count per key, the whole
+    * result table rewritten to the memory sink every trigger.
     */
   def startCountsUpdate(parsed: DataFrame, keyCol: String,
       queryName: String): StreamingQuery =

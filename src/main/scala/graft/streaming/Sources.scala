@@ -55,7 +55,7 @@ final case class FileLinesSource(path: String,
   def load(spark: SparkSession): DataFrame = {
     val r = spark.readStream
     maxFilesPerTrigger.foreach(n => r.option("maxFilesPerTrigger", n))
-    r.text(path).withColumnRenamed("value", "value")
+    r.text(path)
   }
 }
 

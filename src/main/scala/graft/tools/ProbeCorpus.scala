@@ -2,9 +2,9 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
-/** Deterministic ×N synthetic corpus for superlinearity probes,
-  * shared by [[graft.Bench]]'s in-run 10× probe and the standalone
-  * [[ScaleProbe]] (which pushes to 100× — sf10-equivalent):
+/** Deterministic ×N synthetic corpus for the superlinearity probe
+  * [[ScaleProbe]] (×10 = sf1-equivalent over sf0.1, ×100 =
+  * sf10-equivalent):
   *
   *  - documents: per-copy md5-keyed token shuffle — every token-level
   *    statistic (quality, stopwords, langid, token counts) is

@@ -1,19 +1,25 @@
 package graft.tools
 
-/** Standalone superlinearity probe at an arbitrary corpus multiple —
-  * the r11 extension of Bench's in-run 10× probe to a NEW decade
-  * (×100 over sf0.1 = sf10-equivalent on documents/embeddings/events).
+import org.apache.commons.io.FileUtils
+
+/** The superlinearity probe beyond the largest real SF: times named
+  * catalog queries on a ×copies salted corpus ([[ProbeCorpus]]) of
+  * `sfDir` against the same queries at `sfDir`. ×10 over sf0.1 is the
+  * sf1-equivalent point, ×100 the sf10-equivalent one. Bench's
+  * headline `worst_scale_ratios` names the queries worth probing.
   *
   * Usage:
   *   runMain graft.tools.ScaleProbe <sfDir> <copies> <outJson> <q1,..>
   *
-  * For each query: 2 warm + 1 timed run at the BASE sf (steady-state
-  * reference), then 2 timed runs on the ×copies corpus keeping the
-  * min (the agreeing-evidence rule from Bench's probe: a genuinely
+  * For each query: 2 warm + 1 timed run at the BASE sf (a paired
+  * reference, timed under the probe's own host conditions), then 2
+  * timed runs on the ×copies corpus keeping the min (a genuinely
   * superlinear query is slow twice, a GC pause isn't). Emits one JSON
   * line and writes it to <outJson>: per-query base/probe seconds,
   * probe/base ratio, and the flag list (ratio > 1.5 × copies AND
-  * probe >= 1 s — the same 15×-at-10× bar generalized).
+  * probe >= 1 s — the catalog's 15×-at-10× bar generalized). The
+  * corpus lives in a temp dir removed at exit unless a reusable
+  * corpus dir is given (see below).
   */
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
@@ -95,11 +101,7 @@ object ScaleProbe {
       println(line)
       java.nio.file.Files.writeString(java.nio.file.Paths.get(outJson), line)
     } finally {
-      if (keepDir.isEmpty) {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(dir).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
-      }
+      if (keepDir.isEmpty) FileUtils.deleteQuietly(dir.toFile)
       spark.stop()
     }
   }

@@ -7,10 +7,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * no independent bench record at all. BenchBudget makes the record's
   * EXISTENCE robust the way the degraded gates made its QUALITY
   * robust: optional blocks are shed loudly (recorded in budget_shed)
-  * in a fixed priority order — big probe first, then 10× streaming,
-  * then extra/noisy passes, then the warmup refinement — while the
-  * mandatory core (timed passes, scale ratios, baseline-parity
-  * streaming, artifact writes) always runs.
+  * in a fixed priority order — 10× streaming first, then extra/noisy
+  * passes, then the warmup refinement — while the mandatory core
+  * (timed passes, scale ratios, baseline-parity streaming, artifact
+  * writes) always runs.
   *
   * r18 additions under test here: the baseline-parity streaming
   * blocks moved FIRST (directive #3, so nothing reserves for them),
@@ -63,7 +63,7 @@ class BenchBudgetSpec extends AnyFunSuite {
   /** Bench.main's gate sequence with a fake clock: same block names,
     * same cost estimates and mandatory reserves (pass ≈ 100 s — the
     * sf0.1 catalog's measured scale — streaming-first mandatory 480 s,
-    * twins 90 s, 10× 240 s, probe 600 s, artifact margin 60 s).
+    * twins 90 s, 10× 240 s, artifact margin 60 s).
     * Returns (budget_shed, core_shed). Mandatory blocks always advance
     * the clock — the simulation cannot "save" them, exactly like main.
     * `retryNeeded` emulates a degraded best-3 verdict after the
@@ -96,7 +96,6 @@ class BenchBudgetSpec extends AnyFunSuite {
       advance(0.2 * passSec)
     advance(passSec) // scale-ratio mid+small passes (mandatory)
     if (b.allow("streaming_10x", 240.0, 60.0)) advance(240.0)
-    if (b.allow("big_probe", 600.0, 60.0)) advance(600.0)
     (b.shed, coreShed.toSeq)
   }
 
@@ -104,19 +103,15 @@ class BenchBudgetSpec extends AnyFunSuite {
     assert(driveGates(3600.0) == ((Nil, Nil)))
   }
 
-  test("the probe starves first as the budget tightens") {
-    assert(driveGates(2000.0) == ((Seq("big_probe"), Nil)))
-  }
-
   test("then the 10x streaming volume") {
-    assert(driveGates(1500.0) ==
-      ((Seq("streaming_10x", "big_probe"), Nil)))
+    // first to starve as the budget tightens: reserved by nothing
+    assert(driveGates(1500.0) == ((Seq("streaming_10x"), Nil)))
   }
 
   test("then the refinements — while the timed core stays whole") {
     val (shed, coreShed) = driveGates(1200.0)
     assert(shed == Seq("warmup_refinement", "extra_pass", "noisy_repass",
-      "streaming_10x", "big_probe"))
+      "streaming_10x"))
     // everything optional gave ground; the 3 timed passes did not
     assert(coreShed.isEmpty)
   }
@@ -128,7 +123,7 @@ class BenchBudgetSpec extends AnyFunSuite {
     // asked — refusal lists carry only decisions that were actually
     // faced
     assert(shed == Seq("st_twins", "warmup_refinement", "noisy_repass",
-      "streaming_10x", "big_probe"))
+      "streaming_10x"))
     assert(coreShed == Seq("pass3"))
   }
 
@@ -138,13 +133,12 @@ class BenchBudgetSpec extends AnyFunSuite {
     assert(driveGates(BenchBudget.DefaultBudgetSec) == ((Nil, Nil)))
   }
 
-  test("on a loaded host the default budget sheds only the probe") {
+  test("on a loaded host the default budget still sheds nothing") {
     // 1.6× pass cost (the documented load-spike regime): the official
     // record keeps the timed passes, both streaming volume points and
-    // the refinements, losing only the extra-decade probe sweep —
-    // which the builder's large-budget close run still carries
+    // the refinements
     assert(driveGates(BenchBudget.DefaultBudgetSec, passSec = 160.0)
-      == ((Seq("big_probe"), Nil)))
+      == ((Nil, Nil)))
   }
 
   test("r18's 5x-pass spike no longer overruns: the core sheds pass 3") {
@@ -157,15 +151,14 @@ class BenchBudgetSpec extends AnyFunSuite {
       driveGates(BenchBudget.DefaultBudgetSec, passSec = 500.0)
     assert(coreShed == Seq("pass3"))
     assert(shed.contains("warmup_refinement") &&
-      shed.contains("streaming_10x") && shed.contains("big_probe"))
+      shed.contains("streaming_10x"))
   }
 
   test("a degraded verdict buys a two-pass retry when the budget fits") {
-    // directive #1b: the retry outranks the probe (asked earlier,
-    // probe reserved by nothing) — on the default budget the retry
-    // runs and only the probe starves
+    // directive #1b: on the default budget the retry runs and nothing
+    // starves
     assert(driveGates(BenchBudget.DefaultBudgetSec, retryNeeded = true)
-      == ((Seq("big_probe"), Nil)))
+      == ((Nil, Nil)))
     // under a tight budget the retry itself is refused, loudly
     val (shed, _) = driveGates(1400.0, retryNeeded = true)
     assert(shed.contains("degraded_retry"))

@@ -188,6 +188,15 @@ class BenchGateSpec extends SparkSuite {
     assert(math.abs(Bench.best3SpreadPct(r15) - 84.73) < 0.01)
     assert(Bench.best3SpreadPct(Seq(57.0)) == -1.0)
     assert(Bench.best3SpreadPct(Seq.empty) == -1.0)
+    // the all-pass spread behind pass_spread_pct and culprit_pass:
+    // (621.3-112.0)/112.0 = 454.73%
+    assert(math.abs(Bench.passSpreadPct(r15) - 454.73) < 0.01)
+    assert(Bench.passSpreadPct(Seq(57.0)) == -1.0)
+    assert(Bench.passSpreadPct(Seq(0.0, 57.0)) == -1.0)
+    for (totals <- Seq(r15, Seq(100.0, 105.0, 109.0), Seq(100.0, 111.0),
+        Seq(100.0, 100.0, 110.0), Seq(57.0)))
+      assert((Bench.degradedVerdict(totals)._2 > 0) ==
+        (Bench.passSpreadPct(totals) > 10.0), totals)
   }
 
   test("streamingAtVolume emits exactly the fullvolume and 10x keys " +

@@ -10,6 +10,7 @@ import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.BeforeAndAfterAll
+import scala.jdk.CollectionConverters._
 
 /** The custom DataSource V2 must (a) parse byte-for-byte what the
   * Hadoop-text fallback parses — including latin-1 titles, (b) keep
@@ -159,6 +160,23 @@ class DatSourceSpec extends SparkSuite with BeforeAndAfterAll {
     val expected = MovieLens.readDat(spark, usersDat, userSchema)
       .filter(pred).count()
     assert(df.count() == expected && df.count() > 0)
+  }
+
+  test("q56_dat_source keeps one temp root however often it runs") {
+    // the catalog query's DataFrame reads its round-trip files lazily,
+    // so they live under one per-JVM root instead of a new top-level
+    // temp dir per execution
+    val tmp = Paths.get(System.getProperty("java.io.tmpdir"))
+    def roots(): Int = {
+      val ls = Files.list(tmp)
+      try ls.iterator().asScala
+        .count(_.getFileName.toString.startsWith("graft_dat_rt"))
+      finally ls.close()
+    }
+    val before = roots()
+    (1 to 3).foreach(_ =>
+      assert(DatSourceQueries.q56DatSource(spark, sf0001).count() > 0))
+    assert(roots() - before <= 1)
   }
 
   test("short-name registration and schema inference work") {
