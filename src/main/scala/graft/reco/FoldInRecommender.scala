@@ -13,7 +13,9 @@ import org.apache.spark.sql.DataFrame
   * score s = Y·u, mask rated items to -∞, return top-N — the standard
   * ALS fold-in (Hu/Koren/Volinsky-style ridge solve). Item factors are
   * collected to the driver ONCE (C10: serving must not launch Spark
-  * jobs); each request is O(|items|·rank) driver math in Breeze.
+  * jobs); each request is a rank × rank Breeze solve plus one
+  * O(|items|·rank) scoring pass over flat arrays with a bounded top-N
+  * heap (the reference's `argpartition`).
   *
   * Deviation from the reference (documented): `recommender.py:44-48`
   * builds `Y_r` in item-factor order but `r` in request order, silently
@@ -26,12 +28,19 @@ object FoldInRecommender {
 
   final case class Rec(filmId: Int, title: String, score: Double)
 
-  /** Driver-side model state: item ids, rank-wide factor matrix
-    * (|items| × rank), and an id→title map.
+  /** Driver-side model state, built once by [[fromFactors]]:
+    * `factors` holds the |items| × `rank` item-factor matrix row-major
+    * (item `i`'s factor is `factors(i * rank until (i + 1) * rank)`),
+    * and `titles(i)` is item `i`'s title ("" when unknown), both aligned
+    * with `itemIds`.
+    *
+    * Order contract of [[recommend]]: by score descending, then filmId
+    * ascending — exactly `sortBy(r => (-r.score, r.filmId))` under
+    * Scala's total `Double` ordering, so a score of 0.0 ranks above
+    * -0.0 and NaN scores rank last; equal keys keep model row order.
     */
-  final case class Model(itemIds: Array[Int], factors: DenseMatrix[Double],
-      titles: Map[Int, String]) {
-    val rank: Int = factors.cols
+  final class Model private[reco] (val itemIds: Array[Int], val rank: Int,
+      val factors: Array[Double], val titles: Array[String]) {
     private val rowOf: Map[Int, Int] = itemIds.zipWithIndex.toMap
 
     /** The ridge solve alone: fold a seed-rating set into a rank-dim
@@ -42,35 +51,111 @@ object FoldInRecommender {
       * asserted against `ALSModel.userFactors` directly (RecoSpec).
       */
     def foldInVector(seedRatings: Seq[(Int, Double)],
-        reg: Double = 0.1): DenseVector[Double] = {
-      val known = seedRatings.filter { case (id, _) => rowOf.contains(id) }
-      require(known.nonEmpty, "Ninguna de las pelis está en el modelo")
-      // Y_R (k × rank) and r (k), id-aligned
-      val yr = DenseMatrix.zeros[Double](known.size, rank)
-      val r = DenseVector.zeros[Double](known.size)
-      known.zipWithIndex.foreach { case ((id, rating), i) =>
-        yr(i, ::) := factors(rowOf(id), ::)
-        r(i) = rating
-      }
-      val lhs = (yr.t * yr) + (DenseMatrix.eye[Double](rank) *:* reg)
-      val rhs = yr.t * r
-      lhs \ rhs
-    }
+        reg: Double = 0.1): DenseVector[Double] =
+      solve(known(seedRatings), reg)
 
-    /** Top-N recommendations for a cold-start user's seed ratings. */
+    /** Top-N recommendations for a cold-start user's seed ratings: one
+      * pass over the items keeps the best `topN` unrated ones in a
+      * bounded heap, so a dropped candidate costs one dot product. */
     def recommend(seedRatings: Seq[(Int, Double)], topN: Int = 5,
         reg: Double = 0.1): Seq[Rec] = {
-      val known = seedRatings.filter { case (id, _) => rowOf.contains(id) }
-      val u = foldInVector(seedRatings, reg)
-      val scores = factors * u
-      val ratedRows = known.map { case (id, _) => rowOf(id) }.toSet
-      val ranked = (0 until itemIds.length).iterator
-        .filterNot(ratedRows.contains)
-        .map(i => Rec(itemIds(i), titles.getOrElse(itemIds(i), ""),
-          scores(i)))
-        .toSeq
-        .sortBy(rec => (-rec.score, rec.filmId))
-      ranked.take(topN)
+      val seeds = known(seedRatings)
+      val u = solve(seeds, reg).data
+      val rated = seeds.map(_._1).sorted
+      val k = math.max(0, topN)
+      val heapRow = new Array[Int](k)
+      val heapScore = new Array[Double](k)
+      var size = 0
+      var next = 0 // first entry of `rated` not below the current row
+      var i = 0
+      while (i < itemIds.length) {
+        while (next < rated.length && rated(next) < i) next += 1
+        if (k > 0 && (next == rated.length || rated(next) != i)) {
+          var s = 0.0
+          var j = 0
+          val base = i * rank
+          while (j < rank) { s += factors(base + j) * u(j); j += 1 }
+          if (size < k) {
+            heapRow(size) = i; heapScore(size) = s; size += 1
+            siftUp(heapRow, heapScore, size - 1)
+          } else if (ranksBefore(s, i, heapScore(0), heapRow(0))) {
+            heapRow(0) = i; heapScore(0) = s
+            siftDown(heapRow, heapScore, size)
+          }
+        }
+        i += 1
+      }
+      (0 until size)
+        .sortWith((a, b) =>
+          ranksBefore(heapScore(a), heapRow(a), heapScore(b), heapRow(b)))
+        .map(h => Rec(itemIds(heapRow(h)), titles(heapRow(h)), heapScore(h)))
+    }
+
+    /** The seeds whose film the model knows, as (row, rating), in
+      * request order (duplicates kept: each one weighs in the solve). */
+    private def known(seedRatings: Seq[(Int, Double)]): Array[(Int, Double)] = {
+      val seeds = seedRatings.iterator.collect {
+        case (id, rating) if rowOf.contains(id) => (rowOf(id), rating)
+      }.toArray
+      require(seeds.nonEmpty, "Ninguna de las pelis está en el modelo")
+      seeds
+    }
+
+    /** (Y_Rᵀ·Y_R + λ·I) · u = Y_Rᵀ·r, accumulated over the seed rows. */
+    private def solve(seeds: Array[(Int, Double)], reg: Double)
+        : DenseVector[Double] = {
+      val lhs = new Array[Double](rank * rank)
+      val rhs = new Array[Double](rank)
+      seeds.foreach { case (row, rating) =>
+        val base = row * rank
+        var p = 0
+        while (p < rank) {
+          val yp = factors(base + p)
+          rhs(p) += yp * rating
+          var q = 0
+          while (q < rank) { lhs(p * rank + q) += yp * factors(base + q); q += 1 }
+          p += 1
+        }
+      }
+      (0 until rank).foreach(p => lhs(p * rank + p) += reg)
+      new DenseMatrix(rank, rank, lhs) \ new DenseVector(rhs)
+    }
+
+    /** Whether (score `sa`, row `ra`) ranks before (`sb`, `rb`): the
+      * (-score, filmId) total order, then row order. */
+    private def ranksBefore(sa: Double, ra: Int, sb: Double, rb: Int): Boolean = {
+      val c = java.lang.Double.compare(-sa, -sb)
+      if (c != 0) c < 0
+      else if (itemIds(ra) != itemIds(rb)) itemIds(ra) < itemIds(rb)
+      else ra < rb
+    }
+
+    // The heap keeps its worst-ranked entry at the root.
+    private def siftUp(row: Array[Int], score: Array[Double], from: Int): Unit = {
+      var c = from
+      while (c > 0 && ranksBefore(score((c - 1) / 2), row((c - 1) / 2), score(c), row(c))) {
+        swap(row, score, c, (c - 1) / 2)
+        c = (c - 1) / 2
+      }
+    }
+
+    private def siftDown(row: Array[Int], score: Array[Double], size: Int): Unit = {
+      var p = 0
+      var done = false
+      while (!done) {
+        var worst = p
+        val l = 2 * p + 1
+        if (l < size && ranksBefore(score(worst), row(worst), score(l), row(l))) worst = l
+        if (l + 1 < size && ranksBefore(score(worst), row(worst), score(l + 1), row(l + 1)))
+          worst = l + 1
+        if (worst == p) done = true
+        else { swap(row, score, p, worst); p = worst }
+      }
+    }
+
+    private def swap(row: Array[Int], score: Array[Double], a: Int, b: Int): Unit = {
+      val r = row(a); row(a) = row(b); row(b) = r
+      val s = score(a); score(a) = score(b); score(b) = s
     }
   }
 
@@ -99,10 +184,10 @@ object FoldInRecommender {
   def fromFactors(ids: Array[Int], rows: Array[Array[Double]],
       titles: Map[Int, String]): Model = {
     val rank = rows.head.length
-    val mat = DenseMatrix.zeros[Double](ids.length, rank)
+    val flat = new Array[Double](ids.length * rank)
     rows.zipWithIndex.foreach { case (f, i) =>
-      (0 until rank).foreach(j => mat(i, j) = f(j))
+      System.arraycopy(f, 0, flat, i * rank, rank)
     }
-    Model(ids, mat, titles)
+    new Model(ids, rank, flat, ids.map(titles.getOrElse(_, "")))
   }
 }

@@ -1,10 +1,9 @@
 package graft.streaming
 
-import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
+import graft.core.HttpShim
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -17,8 +16,13 @@ import org.apache.spark.sql.functions._
   * panels polling `/counts` every 2 s — written from scratch, no
   * reference markup), 404 elsewhere.
   *
-  * Same serving pattern as [[graft.reco.RecommenderService]]: JDK
-  * built-in HttpServer + Spark's own Jackson, zero added dependencies.
+  * Same serving pattern as [[graft.reco.RecommenderService]]:
+  * [[graft.core.HttpShim]] + Spark's own Jackson, zero added
+  * dependencies. The shim's handler pool lets static serving and
+  * `/counts` polling proceed independently: on the single dispatcher
+  * thread one slow Spark job would freeze the page the browser polls
+  * from (r11 advice).
+  *
   * One deviation, documented: the reference pulls the whole table to
   * pandas and `value_counts` per request — here the three categorical
   * counts are ONE Spark aggregation over the memory sink (count per (gender, occupation,
@@ -29,11 +33,7 @@ import org.apache.spark.sql.functions._
   */
 object LiveCountsService {
 
-  final class Handle private[streaming] (server: HttpServer,
-      pool: java.util.concurrent.ExecutorService) {
-    def port: Int = server.getAddress.getPort
-    def stop(): Unit = { server.stop(0); pool.shutdown() }
-  }
+  type Handle = HttpShim.Handle
 
   /** Counts for the three dashboard dimensions, computed in Spark.
     * Exposed for tests and reuse by non-HTTP front ends.
@@ -54,29 +54,8 @@ object LiveCountsService {
 
   def start(spark: SparkSession, table: String, port: Int = 0): Handle = {
     val mapper = new ObjectMapper()
-    val server = HttpServer.create(new InetSocketAddress(port), 0)
-    // Without an explicit executor every request — including the
-    // static dashboard page — serializes on the single dispatcher
-    // thread, and each /counts request runs a blocking Spark collect:
-    // one slow Spark job would freeze the page the browser polls from
-    // (r11 advice). A small fixed pool lets static serving and
-    // /counts polling proceed independently.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-    server.setExecutor(pool)
-
-    def respond(ex: HttpExchange, code: Int, contentType: String,
-        body: Array[Byte]): Unit = {
-      ex.getResponseHeaders.set("Content-Type", contentType)
-      ex.sendResponseHeaders(code, body.length.toLong)
-      ex.getResponseBody.write(body)
-      ex.close()
-    }
-
-    server.createContext("/counts", new HttpHandler {
-      override def handle(ex: HttpExchange): Unit = {
-        if (ex.getRequestMethod != "GET") {
-          ex.sendResponseHeaders(404, -1); ex.close(); return
-        }
+    HttpShim.start("counts", port,
+      HttpShim.Route("GET", "/counts", { ex =>
         try {
           val counts = computeCounts(spark, table)
           val out = mapper.createObjectNode()
@@ -86,28 +65,19 @@ object LiveCountsService {
               o.put(k, v)
             }
           }
-          respond(ex, 200, "application/json",
+          HttpShim.respond(ex, 200, "application/json",
             mapper.writeValueAsBytes(out))
         } catch {
-          case e: Exception =>
-            respond(ex, 500, "text/plain",
-              String.valueOf(e.getMessage)
-                .getBytes(StandardCharsets.UTF_8))
+          case e: Exception => HttpShim.error(ex, 500, e)
         }
-      }
-    })
-    server.createContext("/", new HttpHandler {
-      override def handle(ex: HttpExchange): Unit = {
-        if (ex.getRequestMethod == "GET" &&
-          (ex.getRequestURI.getPath == "/" ||
-            ex.getRequestURI.getPath == "/index.html")) {
-          respond(ex, 200, "text/html; charset=utf-8",
+      }),
+      HttpShim.Route("GET", "/", { ex =>
+        val path = ex.getRequestURI.getPath
+        if (path == "/" || path == "/index.html")
+          HttpShim.respond(ex, 200, "text/html; charset=utf-8",
             DashboardHtml.getBytes(StandardCharsets.UTF_8))
-        } else { ex.sendResponseHeaders(404, -1); ex.close() }
-      }
-    })
-    server.start()
-    new Handle(server, pool)
+        else HttpShim.notFound(ex)
+      }))
   }
 
   /** Zero-dependency live dashboard: three bar panels fed by /counts. */

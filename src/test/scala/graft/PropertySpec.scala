@@ -89,9 +89,10 @@ class PropertySpec extends SparkSuite {
       seedIds <- Gen.pick(nSeed, 0 until nItems)
       ratings <- Gen.listOfN(nSeed, Gen.choose(1.0, 5.0))
       scale <- Gen.choose(1.1, 3.0)
-    } yield (nItems, cells, seedIds.toSeq, ratings, scale)
+      topN <- Gen.choose(0, 70)
+    } yield (nItems, cells, seedIds.toSeq, ratings, scale, topN)
     samples(caseGen, 25, 99L).foreach {
-      case (nItems, cells, seedIds, ratings, scale) =>
+      case (nItems, cells, seedIds, ratings, scale, topN) =>
         val rows = cells.grouped(rank).map(_.toArray).toArray
         val m = graft.reco.FoldInRecommender.fromFactors(
           (0 until nItems).toArray, rows,
@@ -105,6 +106,23 @@ class PropertySpec extends SparkSuite {
         // by c > 0 and the ranking is unchanged
         val scaled = seed.map { case (id, r) => (id, r * scale) }
         assert(m.recommend(scaled, topN = 5).map(_.filmId) == base)
+        // the bounded top-N equals sort-take-n over the full score
+        // vector, also with rows paired up (exact score ties) under ids
+        // that descend with the row, so the filmId tie-break is not
+        // row order
+        val paired = rows.indices.map(i => rows(i / 2 * 2)).toArray
+        val tied = graft.reco.FoldInRecommender.fromFactors(
+          (0 until nItems).reverse.toArray, paired, Map())
+        Seq(m -> rows, tied -> paired).foreach { case (model, ys) =>
+          val u = model.foldInVector(seed)
+          val scores = ys.map(y => y.indices.foldLeft(0.0)((s, j) => s + y(j) * u(j)))
+          val ids = model.itemIds
+          val want = ids.indices.filterNot(i => seedIds.contains(ids(i)))
+            .map(i => (ids(i), scores(i)))
+            .sortBy { case (id, s) => (-s, id) }.take(topN)
+          assert(model.recommend(seed, topN).map(r => (r.filmId, r.score)) == want,
+            s"topN $topN over $nItems items")
+        }
     }
   }
 

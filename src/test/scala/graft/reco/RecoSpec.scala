@@ -129,6 +129,55 @@ class RecoSpec extends SparkSuite {
     }
   }
 
+  // ---- the ranking contract: score desc, then filmId asc ----
+
+  private lazy val handBuilt = FoldInRecommender.fromFactors(
+    Array(10, 11, 12, 13),
+    Array(
+      Array(1.0, 0.0, 0.0),
+      Array(0.0, 1.0, 0.0),
+      Array(0.0, 0.0, 1.0),
+      Array(1.0, 1.0, 0.0)),
+    Map(10 -> "A", 11 -> "B", 12 -> "C", 13 -> "D"))
+
+  test("fold-in breaks score ties by the lower filmId, not row order") {
+    // rows of 30, 10, 20 are equal, so their scores tie exactly
+    val m = FoldInRecommender.fromFactors(
+      Array(30, 10, 20, 40, 50),
+      Array(Array(1.0, 0.0), Array(1.0, 0.0), Array(1.0, 0.0),
+        Array(0.0, 2.0), Array(1.0, 1.0)),
+      Map())
+    val recs = m.recommend(Seq((50, 4.0)), topN = 4)
+    assert(recs.map(_.filmId) == Seq(40, 10, 20, 30))
+    assert(recs.tail.map(_.score).distinct.size == 1)
+    assert(m.recommend(Seq((50, 4.0)), topN = 2).map(_.filmId) == Seq(40, 10))
+  }
+
+  test("fold-in topN beyond the candidates returns every unrated item; 0 none") {
+    val seed = Seq((10, 4.0), (11, 2.0))
+    assert(handBuilt.recommend(seed, topN = 10).map(_.filmId) == Seq(13, 12))
+    assert(handBuilt.recommend(seed, topN = 0).isEmpty)
+    assert(handBuilt.recommend(seed, topN = -1).isEmpty)
+  }
+
+  test("fold-in counts a duplicated seed twice in the solve, masks it once") {
+    // Y_R holds row 10 twice: lhs = diag(2.1, 1.1, 0.1), rhs = (8, 2, 0)
+    val recs = handBuilt.recommend(Seq((10, 4.0), (10, 4.0), (11, 2.0)), topN = 5)
+    assert(recs.map(_.filmId) == Seq(13, 12))
+    assert(math.abs(recs.head.score - (8.0 / 2.1 + 2.0 / 1.1)) < 1e-9)
+  }
+
+  test("fold-in ranks NaN scores after every number, ties by filmId") {
+    val m = FoldInRecommender.fromFactors(
+      Array(4, 2, 1, 3),
+      Array(Array(Double.NaN, 1.0), Array(Double.NaN, 0.0),
+        Array(1.0, 0.0), Array(0.0, 1.0)),
+      Map())
+    // u = (0, 5/1.1): item 1 scores 0.0, items 2 and 4 NaN
+    assert(m.recommend(Seq((3, 5.0)), topN = 5).map(_.filmId) == Seq(1, 2, 4))
+    assert(m.recommend(Seq((3, 5.0)), topN = 2).map(_.filmId) == Seq(1, 2))
+  }
+
   test("fold-in masks rated items from recommendations") {
     val m = FoldInRecommender.fromFactors(
       Array(10, 11, 12),
