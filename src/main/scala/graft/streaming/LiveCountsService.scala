@@ -5,7 +5,7 @@ import java.nio.charset.StandardCharsets
 import com.fasterxml.jackson.databind.ObjectMapper
 import graft.core.HttpShim
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.DatasetBridge
 
 /** HTTP dashboard shim over the live-counts memory sink — the
   * reference's `GET /counts` endpoint (`app3/live_counts.py:73-95`):
@@ -20,36 +20,43 @@ import org.apache.spark.sql.functions._
   * [[graft.core.HttpShim]] + Spark's own Jackson, zero added
   * dependencies. The shim's handler pool lets static serving and
   * `/counts` polling proceed independently: on the single dispatcher
-  * thread one slow Spark job would freeze the page the browser polls
-  * from (r11 advice).
+  * thread one slow read would freeze the page the browser polls from
+  * (r11 advice).
   *
-  * One deviation, documented: the reference pulls the whole table to
-  * pandas and `value_counts` per request — here the three categorical
-  * counts are ONE Spark aggregation over the memory sink (count per (gender, occupation,
-  * age_bin) triple, bounded by the tiny category product, with the
-  * three marginals summed on the driver), so the request cost is an
-  * in-memory scan + tiny agg, not a full driver materialization of
-  * every row ever received.
+  * The counts are the reference's own computation, which pulls the
+  * whole table to pandas and runs `value_counts` per dimension: here
+  * [[computeCounts]] folds the rows the memory sink already holds on
+  * the driver into the three tallies. A read runs no Spark job and
+  * ships no rows to executors. Nothing is cached between reads, so the
+  * next read after a query restart sees the new query's sink.
   */
 object LiveCountsService {
 
   type Handle = HttpShim.Handle
 
-  /** Counts for the three dashboard dimensions, computed in Spark.
-    * Exposed for tests and reuse by non-HTTP front ends.
+  /** Dashboard dimension -> the sink column it tallies. */
+  private val Dims = Seq("gender" -> "gender", "occupation" -> "occupation",
+    "age" -> "age_bin")
+
+  /** Counts for the three dashboard dimensions, folded on the driver
+    * over the memory sink behind `table` (the query name of a
+    * [[FeedbackPipeline.startMemoryAppend]] query): a null gender or
+    * occupation (malformed JSON parses to nulls) is skipped, and
+    * `age_bin` is always set (a missing age bins as "56+", as in the
+    * reference). Exposed for tests and reuse by non-HTTP front ends.
+    * Throws, naming `table`, if `table` is not a memory sink.
     */
   def computeCounts(spark: SparkSession, table: String)
       : Map[String, Map[String, Long]] = {
-    val rows = spark.table(table)
-      .select(col("gender"), col("occupation"), col("age_bin"))
-      .groupBy(col("gender"), col("occupation"), col("age_bin"))
-      .agg(count(lit(1)).as("n"))
-      .collect()
-    def tally(dim: Int): Map[String, Long] = rows.iterator
-      .filter(r => !r.isNullAt(dim))
-      .toSeq.groupBy(_.getString(dim))
-      .map { case (k, rs) => k -> rs.map(_.getLong(3)).sum }
-    Map("gender" -> tally(0), "occupation" -> tally(1), "age" -> tally(2))
+    val plan = DatasetBridge.memorySinkPlan(spark, table)
+    val names = plan.output.map(_.name)
+    val rows = plan.sink.allData
+    Dims.map { case (dim, c) =>
+      val i = names.indexOf(c)
+      require(i >= 0, s"table '$table' has no column $c")
+      dim -> rows.view.filterNot(_.isNullAt(i)).map(_.getString(i))
+        .groupMapReduce(identity)(_ => 1L)(_ + _)
+    }.toMap
   }
 
   def start(spark: SparkSession, table: String, port: Int = 0): Handle = {
@@ -59,7 +66,7 @@ object LiveCountsService {
         try {
           val counts = computeCounts(spark, table)
           val out = mapper.createObjectNode()
-          Seq("gender", "occupation", "age").foreach { dim =>
+          Dims.foreach { case (dim, _) =>
             val o = out.putObject(dim)
             counts(dim).toSeq.sortBy(_._1).foreach { case (k, v) =>
               o.put(k, v)

@@ -59,10 +59,17 @@ final case class FileLinesSource(path: String,
   }
 }
 
-/** Driver-fed in-memory source for tests and local benchmarks. */
+/** Driver-fed in-memory source for tests and local benchmarks. A batch
+  * is read over `defaultParallelism` partitions, so parsing a large
+  * backlog runs on every core instead of in one task that carries the
+  * whole batch. The stream deals a batch's rows round-robin across the
+  * partitions: the multiset of rows in a batch is what was added, their
+  * order within the batch is not.
+  */
 final class MemorySource(spark: SparkSession) extends StreamSource {
   import spark.implicits._
-  val stream: MemoryStream[String] = MemoryStream[String](spark)
+  val stream: MemoryStream[String] =
+    MemoryStream[String](spark, spark.sparkContext.defaultParallelism)
   def add(msgs: Seq[String]): Unit = stream.addData(msgs)
   def load(s: SparkSession): DataFrame = stream.toDF()
 }

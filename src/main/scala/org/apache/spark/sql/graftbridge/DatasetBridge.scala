@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.execution.command.ViewHelper
+import org.apache.spark.sql.execution.streaming.sources.MemoryPlan
 import org.apache.spark.sql.types.StructType
 
 /** Bridge to the `private[sql]` view catalog. */
@@ -29,4 +30,19 @@ object DatasetBridge {
       analyzedPlan = plan, aliasedPlan = plan, referredTempFunctions = Nil)
     catalog.createTempView(name, view, overrideIfExists = true)
   }
+
+  /** The memory-sink plan behind the temp view `name`: a `memory`-format
+    * streaming query registers its sink under its query name as a view
+    * over a [[MemoryPlan]]. The view is read from the session catalog as
+    * stored, so no analyzer rule runs, nothing is planned and no job
+    * runs. The catalog is asked afresh on every call: a restarted query
+    * replaces the view and its sink. Throws, naming `name`, if it is not
+    * a temp view over a memory sink. */
+  def memorySinkPlan(spark: SparkSession, name: String): MemoryPlan =
+    spark.asInstanceOf[classic.SparkSession].sessionState.catalog
+      .getTempView(name).map(_.child) match {
+      case Some(plan: MemoryPlan) => plan
+      case _ => throw new IllegalArgumentException(
+        s"table '$name' is not a memory sink")
+    }
 }

@@ -264,6 +264,23 @@ class RecoSpec extends SparkSuite {
     assert(lineage.contains("ReliableCheckpointRDD"), lineage)
   }
 
+  test("train, trainImplicit and tune block users and items by parallelism") {
+    // ALS's factor tables keep one partition per block
+    val blocks = math.min(spark.sparkContext.defaultParallelism, 10)
+    val est = AlsTrainer.als(spark.sparkContext, AlsTrainer.Config())
+    assert(est.getNumUserBlocks == blocks && est.getNumItemBlocks == blocks)
+    def factorParts(m: ALSModel): (Int, Int) =
+      (m.userFactors.rdd.getNumPartitions, m.itemFactors.rdd.getNumPartitions)
+    val prepared = AlsTrainer.prepare(ratings)
+    val cfg = AlsTrainer.Config(rank = 2, maxIter = 2)
+    assert(factorParts(AlsTrainer.train(prepared, cfg)) == (blocks, blocks))
+    assert(factorParts(AlsTrainer.trainImplicit(prepared, cfg)) == (blocks, blocks))
+    val tuned = AlsTrainer.tune(prepared, Seq(2), Seq(0.1), Seq(2), cfg)
+    val tunedEst = tuned.getEstimator.asInstanceOf[org.apache.spark.ml.recommendation.ALS]
+    assert(tunedEst.getNumUserBlocks == blocks && tunedEst.getNumItemBlocks == blocks)
+    assert(factorParts(tuned.bestModel.asInstanceOf[ALSModel]) == (blocks, blocks))
+  }
+
   test("summary/describe profile the prepared ratings (A10)") {
     val prepared = AlsTrainer.prepare(ratings)
     val summary = prepared.summary().collect()

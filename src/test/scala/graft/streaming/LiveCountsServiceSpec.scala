@@ -1,7 +1,14 @@
 package graft.streaming
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.jdk.CollectionConverters._
+
 import graft.SparkSuite
 import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.spark.GraftListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.functions.col
 
 /** End-to-end check for the /counts dashboard shim: MemoryStream →
   * FeedbackPipeline parse + memory sink → HTTP GET /counts, compared
@@ -76,5 +83,76 @@ class LiveCountsServiceSpec extends SparkSuite {
       // contract edges: other paths 404
       assert(get(svc.port, "/nope")._1 == 404)
     } finally { svc.stop(); q.stop() }
+  }
+
+  /** The dashboard counts as a Spark aggregation over the sink's table:
+    * one `groupBy` per dimension, nulls left out. */
+  private def groupByOracle(table: String): Map[String, Map[String, Long]] =
+    Seq("gender" -> "gender", "occupation" -> "occupation", "age" -> "age_bin")
+      .map { case (dim, c) =>
+        dim -> spark.table(table).where(col(c).isNotNull).groupBy(col(c)).count()
+          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      }.toMap
+
+  private def parseCounts(body: String): Map[String, Map[String, Long]] = {
+    val root = new ObjectMapper().readTree(body)
+    root.fieldNames().asScala.map { dim =>
+      val node = root.get(dim)
+      dim -> node.fieldNames().asScala.map(k => k -> node.get(k).asLong()).toMap
+    }.toMap
+  }
+
+  test("computeCounts and GET /counts match a groupBy after every trigger, with no job") {
+    val src = new MemorySource(spark)
+    val q = FeedbackPipeline.startMemoryAppend(
+      FeedbackPipeline.parse(src.load(spark)), "feedback_fold")
+    val svc = LiveCountsService.start(spark, "feedback_fold")
+    val jobs = new AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val malformed = Seq("{not json", "", """{"gender": "Mujer", "age": """)
+      val ageless = Seq(
+        """{"gender": "Mujer", "occupation": "Estudiante", "ratings": []}""",
+        """{"gender": "Hombre", "occupation": "Programador", "age": null}""")
+      val noGender = """{"occupation": "Jubilado", "age": 70}"""
+      val triggers = Seq(
+        Seq.empty[String],
+        FeedbackGenerator.batch("inserso", 0, 30) ++ malformed ++ ageless,
+        FeedbackGenerator.batch("revista", 0, 25) :+ noGender,
+        malformed,
+        FeedbackGenerator.batch("random", 0, 40) ++ ageless ++
+          FeedbackGenerator.batch("masculino", 0, 20))
+      triggers.zipWithIndex.foreach { case (msgs, i) =>
+        if (msgs.nonEmpty) src.add(msgs)
+        q.processAllAvailable()
+        val want = groupByOracle("feedback_fold")
+        assert(want("age").values.sum == triggers.take(i + 1).map(_.size).sum)
+        GraftListenerBus.drain(spark.sparkContext)
+        val before = jobs.get()
+        assert(LiveCountsService.computeCounts(spark, "feedback_fold") == want,
+          s"trigger $i")
+        val (code, body) = get(svc.port, "/counts")
+        assert(code == 200 && parseCounts(body) == want, s"trigger $i: $body")
+        GraftListenerBus.drain(spark.sparkContext)
+        assert(jobs.get() == before, s"trigger $i: /counts ran ${jobs.get() - before} jobs")
+      }
+
+      // a table that is not a memory sink is an error that names it
+      spark.range(3).createOrReplaceTempView("counts_not_a_sink")
+      val err = intercept[IllegalArgumentException](
+        LiveCountsService.computeCounts(spark, "counts_not_a_sink"))
+      assert(err.getMessage.contains("counts_not_a_sink"))
+      val other = LiveCountsService.start(spark, "counts_not_a_sink")
+      try {
+        val (code, body) = get(other.port, "/counts")
+        assert(code == 500 && body.contains("counts_not_a_sink"), s"$code $body")
+      } finally other.stop()
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      svc.stop(); q.stop()
+    }
   }
 }

@@ -47,6 +47,30 @@ class SourcesContractSpec extends SparkSuite {
     } finally q.stop()
   }
 
+  test("MemorySource reads one add as one trigger over every core") {
+    import org.apache.spark.sql.functions.{col, spark_partition_id}
+    val src = new MemorySource(spark)
+    val parts = spark.sparkContext.defaultParallelism
+    // more messages than partitions, so that each partition gets rows
+    val msgs = (0 until 10 * parts + 3).map(i => s"""{"k": ${i % 7}}""")
+    src.add(msgs)
+    val q = src.load(spark)
+      .select(col("value"), spark_partition_id().as("part"))
+      .writeStream.format("memory").queryName("memory_source_parts")
+      .outputMode("append").start()
+    try {
+      q.processAllAvailable()
+      assert(q.recentProgress.map(_.numInputRows).filter(_ > 0).toSeq ==
+        Seq(msgs.size.toLong))
+      val rows = spark.table("memory_source_parts").collect()
+      assert(rows.map(_.getInt(1)).distinct.sorted.toSeq == (0 until parts))
+      // the same multiset of messages; their order within the batch is
+      // not part of the contract
+      assert(rows.map(_.getString(0)).groupBy(identity).view.mapValues(_.length).toMap ==
+        msgs.groupBy(identity).view.mapValues(_.length).toMap)
+    } finally q.stop()
+  }
+
   test("FileLinesSource satisfies the downstream value-column contract") {
     val dir = java.nio.file.Files.createTempDirectory("graft_src_contract")
     try {
