@@ -4,6 +4,7 @@ import org.apache.commons.io.FileUtils
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 
+import graft.core.GraftSession
 import graft.tools.CatalogHarness
 
 /** Benchmark main — runs every SparkEntry.queries entry against
@@ -463,11 +464,10 @@ object Bench {
       else try {
         import spark.implicits._
         import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-        val provKey = "spark.sql.streaming.stateStore.providerClass"
-        val prevProv = spark.conf.getOption(provKey)
-        spark.conf.set(provKey, "org.apache.spark.sql.execution." +
-          "streaming.state.RocksDBStateStoreProvider")
-        try {
+        try GraftSession.withConf(spark,
+          "spark.sql.streaming.stateStore.providerClass" ->
+            ("org.apache.spark.sql.execution." +
+              "streaming.state.RocksDBStateStoreProvider")) {
           def rows(df: org.apache.spark.sql.DataFrame): Set[String] =
             df.collect().map(_.toString).toSet
           // one harness for every twin: absorb the untimed prefix (the
@@ -553,14 +553,8 @@ object Bench {
                 .ingestDedupStream(stream.toDF()))
           }
           (sprt ++ sem ++ ingest).toMap
-        } finally {
-          prevProv match {
-            case Some(v) => spark.conf.set(provKey, v)
-            case None => spark.conf.unset(provKey)
-          }
-          Seq("sprt", "semdedup", "ingest")
-            .foreach(n => spark.catalog.dropTempView("bench_twin_" + n))
-        }
+        } finally Seq("sprt", "semdedup", "ingest")
+          .foreach(n => spark.catalog.dropTempView("bench_twin_" + n))
       } catch { case _: Throwable => Map.empty[String, Double] }
     if (stTwins.nonEmpty)
       println(s"""{"metric":"st_twins",${stTwins.toSeq.sortBy(_._1)

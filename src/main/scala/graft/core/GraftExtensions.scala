@@ -5,11 +5,12 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import graft.functions.{BottomKDistinct, CosineSimilarity, TopKByScore}
 
-/** Engine extensions installable via
-  * `SparkSession.builder.withExtensions(new GraftExtensions)` or
-  * `spark.sql.extensions=graft.core.GraftExtensions` — registers the
-  * engine's native functions so pure-SQL clients (`spark.sql`,
-  * thrift-server style) can use them without touching the Scala API.
+/** Engine extensions, registered by [[GraftSession.builder]] on every
+  * session the engine builds (a foreign session can take them through
+  * `spark.sql.extensions=graft.core.GraftExtensions`). They register
+  * the engine's native functions, so pure-SQL clients (`spark.sql`,
+  * thrift-server style) can use them without the Scala API, and the
+  * [[graft.plans.IntervalJoin]] rule and strategy.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {

@@ -18,13 +18,8 @@ object Tables {
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
     if (name == "events") events(spark, sfDir)
-    else {
-      // a nanos-encoded regen fails at scan time unless the flag is on;
-      // no-op for micros files (see eventsRaw's doc on session scope)
-      ensureNanosFlag(spark)
-      conform(
-        normalizeTs(spark.read.parquet(s"$sfDir/$name.parquet"), name), name)
-    }
+    else conform(
+      normalizeTs(spark.read.parquet(s"$sfDir/$name.parquet"), name), name)
 
   /** The engine's pinned schema per table — what every reader of these
     * loaders has been built and oracle-verified against. The testdata
@@ -88,11 +83,6 @@ object Tables {
     }
   }
 
-  private def ensureNanosFlag(spark: SparkSession): Unit = {
-    val key = "spark.sql.legacy.parquet.nanosAsLong"
-    if (!spark.conf.getOption(key).contains("true")) spark.conf.set(key, "true")
-  }
-
   /** Timestamp columns whose parquet encoding has drifted across
     * testdata regenerations (see [[eventsRaw]]). Each is normalized to
     * the type the engine (and its green oracle runs) has always seen:
@@ -128,14 +118,11 @@ object Tables {
     *
     * nanosAsLong is a session-wide flag (the parquet schema converter
     * reads SQLConf, not per-scan options) and is a no-op for non-nanos
-    * files, so setting it up front is safe for both encodings.
-    * [[GraftSession]] and the engine mains set it at session construction;
-    * the guarded set here only covers foreign sessions and fires at most
-    * once, so it never flips behavior mid-session for other reads.
+    * files, so [[GraftSession]] sets it at session construction and the
+    * loaders never change it on a live session.
     */
   private def eventsRaw(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
-    ensureNanosFlag(spark)
     val raw = spark.read.parquet(s"$sfDir/events.parquet")
     raw.schema("ts").dataType match {
       case LongType => // nanos-as-long generation: truncate to micros

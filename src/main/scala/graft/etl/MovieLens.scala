@@ -152,9 +152,10 @@ object MovieLens {
     * `Explorativa1_pyspark.ipynb:266-280`) is replaced by native
     * expressions + a broadcast range join against the 58-row ranges dim
     * (SURVEY §2.9 UD1 option (a)): digit-strip and 3-digit prefix are
-    * codegen'd; the range lookup is a BroadcastNestedLoopJoin with a
-    * 58-row build side — the whole pipeline stays inside whole-stage
-    * codegen instead of round-tripping rows through a Python worker.
+    * codegen'd; the broadcast range lookup plans as
+    * [[graft.plans.IntervalJoin]] over the 58 ranges (a null prefix
+    * keeps its row, with no state) — no row round-trips through a
+    * Python worker.
     * Occupation map and age groups: `Explorativa1_pyspark.ipynb:251-265`.
     */
   def enrichUsers(spark: SparkSession, users: DataFrame): DataFrame = {

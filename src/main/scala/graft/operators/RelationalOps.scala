@@ -462,10 +462,11 @@ object RelationalOps {
   /** Range-dim lookup — SURVEY §2.9 UD1 re-expressed natively: the
     * reference's only UDF (zip→state: 3-digit prefix against 58
     * (low,high,state) ranges) becomes a broadcast range join against a
-    * literal dim table. BroadcastNestedLoopJoin with a tiny build side:
-    * the probe side streams through codegen, no shuffle, no Python.
+    * literal dim table. The broadcast hint plans it as
+    * [[graft.plans.IntervalJoin]]: the 5 tiers are indexed once and each
+    * customer probes them locally, with no shuffle and no Python.
     */
-  private val balTiers: Seq[(Double, Double, String)] = Seq(
+  private[graft] val balTiers: Seq[(Double, Double, String)] = Seq(
     (-1e18, 0.0, "debt"),
     (0.0, 1000.0, "bronze"),
     (1000.0, 3000.0, "silver"),

@@ -14,7 +14,7 @@ import org.apache.spark.sql.types.{DataType, Decimal}
 
 /** Interval (range) join as a first-class operator — logical plan +
   * optimizer rule + planner strategy + physical exec, the full custom-
-  * operator stack registered through `spark.experimental` or
+  * operator stack, registered on every engine session by
   * [[graft.core.GraftExtensions]].
   *
   * Why: open-source Spark plans `fact JOIN dim ON p >= lo AND p < hi`
@@ -413,19 +413,6 @@ object IntervalJoin {
         newLeft: SparkPlan, newRight: SparkPlan): RangeIntervalJoinExec =
       copy(left = newLeft, right = newRight)
   }
-
-  /** Idempotently registers the rule + strategy on a LIVE session (the
-    * extensions path in [[graft.core.GraftExtensions]] covers sessions
-    * built with `.withExtensions`).
-    */
-  def install(spark: SparkSession): Unit = {
-    if (!spark.experimental.extraOptimizations.contains(RewriteRule))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ RewriteRule
-    if (!spark.experimental.extraStrategies.contains(JoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ JoinStrategy
-  }
 }
 
 /** Catalog query driving [[IntervalJoin]] on testdata. */
@@ -440,7 +427,6 @@ object IntervalJoinQueries {
     * agree bit-for-bit on the double comparisons.
     */
   def q31IntervalJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    IntervalJoin.install(spark)
     val step = 300.0
     val dim = spark.range(0, 2000).select(
       F.col("id").as("bin"),
@@ -471,7 +457,6 @@ object IntervalJoinQueries {
     * query shape alive when the interval set itself is a large table.
     */
   def q55RangeIntervalJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    IntervalJoin.install(spark)
     val step = 30.0
     val dim = spark.range(0, 20000).select(
       F.col("id").as("bin"),

@@ -10,8 +10,9 @@ package graft.tools
   *
   * Usage: runMain graft.tools.PlanDump <sfDir> <outDir> <tag> <q1,q2,...|ALL>
   *
-  * Runs in [[CatalogHarness.session]], the session graft.Bench uses, so
-  * the captured plans are the ones the bench actually runs.
+  * Runs in [[CatalogHarness.session]], the session graft.Bench uses.
+  * Every engine session plans the same way from its first query, so the
+  * captured plans are the ones the bench runs, whatever ran before.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {

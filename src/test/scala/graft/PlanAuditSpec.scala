@@ -1,5 +1,7 @@
 package graft
 
+import graft.core.GraftSession
+
 /** Catalog-wide physical-plan audit: every SparkEntry query is planned
   * at sf0.001 and screened for shapes that do not survive scale.
   * Queries evolve; this keeps the plan invariants from regressing
@@ -144,14 +146,11 @@ class PlanAuditSpec extends SparkSuite {
     // scope (r14 advice: the assertion otherwise depends on ambient
     // session config, so a harmless config experiment elsewhere in
     // the suite would flip it into a hard failure).
-    val pinned = Seq(
+    GraftSession.withConf(spark,
       "spark.sql.autoBroadcastJoinThreshold" -> "10485760",
       "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "10485760",
-      "spark.sql.adaptive.enabled" -> "true")
-    val saved = pinned.map { case (k, _) =>
-      k -> spark.conf.getOption(k) }
-    pinned.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+      "spark.sql.adaptive.enabled" -> "true"
+    ) {
       val df = graft.graph.GraphOps.graphItemCooccur(spark, sf01)
       assert(!df.queryExecution.logical.toString.contains("UnresolvedHint") &&
         !df.queryExecution.optimizedPlan.toString.contains("ResolvedHint"),
@@ -163,9 +162,6 @@ class PlanAuditSpec extends SparkSuite {
       assert(!plan.contains("SortMergeJoin") &&
         !plan.contains("ShuffledHashJoin"),
         s"a join fell back to a shuffle at sf0.1:\n$plan")
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 

@@ -3,14 +3,13 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared ScalaTest base: one local session per suite. */
+import graft.core.GraftSession
+
+/** Shared ScalaTest base: the engine's session, on 4 local cores. */
 trait SparkSuite extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
+  lazy val spark: SparkSession = GraftSession.builder(getClass.getSimpleName)
     .master("local[4]")
-    .appName(getClass.getSimpleName)
     .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
     .getOrCreate()
 
   val sf0001 = "/root/testdata/sf0.001"
@@ -22,15 +21,9 @@ trait SparkSuite extends AnyFunSuite {
     * definition for every streaming-state suite (it was copy-pasted
     * into three specs before a config change could silently leave
     * them testing different providers). */
-  def withRocksDb[T](body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
+  def withRocksDb[T](body: => T): T =
+    GraftSession.withConf(spark,
+      "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    )(body)
 }

@@ -44,35 +44,16 @@ class BottomKDistinctSpec extends SparkSuite {
   }
 
   test("SQL registration and constant-k analysis guard") {
-    // extensions apply at session CREATION (the GraftExtensionsSpec
-    // pattern): detach the suite's shared session so the builder
-    // really constructs a new one, and restore afterwards
-    import org.apache.spark.sql.SparkSession
-    spark.sparkContext // force the shared suite session first
-    val priorDefault = SparkSession.getDefaultSession
-    val priorActive = SparkSession.getActiveSession
-    SparkSession.clearDefaultSession()
-    SparkSession.clearActiveSession()
-    try {
-      val s = SparkSession.builder()
-        .master("local[2]")
-        .appName("bottomk-ext-test")
-        .config("spark.ui.enabled", "false")
-        .withExtensions(new graft.core.GraftExtensions)
-        .getOrCreate()
-      s.range(0, 10).createOrReplaceTempView("t")
-      val r = s.sql("SELECT bottomk_distinct(id % 4, 3) AS bk FROM t")
-        .collect()(0).getSeq[Long](0).toList
-      assert(r == List(0L, 1L, 2L))
-      val err = intercept[Exception] {
-        s.sql("SELECT bottomk_distinct(id, cast(id as int)) FROM t")
-          .collect()
-      }
-      assert(err.getMessage.contains("foldable") ||
-        err.getMessage.toLowerCase.contains("constant"))
-    } finally {
-      priorDefault.foreach(SparkSession.setDefaultSession)
-      priorActive.foreach(SparkSession.setActiveSession)
+    spark.range(0, 10).createOrReplaceTempView("bottomk_t")
+    val r = spark
+      .sql("SELECT bottomk_distinct(id % 4, 3) AS bk FROM bottomk_t")
+      .collect()(0).getSeq[Long](0).toList
+    assert(r == List(0L, 1L, 2L))
+    val err = intercept[Exception] {
+      spark.sql("SELECT bottomk_distinct(id, cast(id as int)) FROM bottomk_t")
+        .collect()
     }
+    assert(err.getMessage.contains("foldable") ||
+      err.getMessage.toLowerCase.contains("constant"))
   }
 }

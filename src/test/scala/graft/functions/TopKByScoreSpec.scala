@@ -48,32 +48,11 @@ class TopKByScoreSpec extends SparkSuite {
   }
 
   test("topk_ids is callable from SQL via GraftExtensions") {
-    // extensions apply at session creation: detach the suite session so
-    // the builder constructs a fresh one on the shared SparkContext
-    // (do NOT stop it — that would kill the context for other suites)
-    val sess = org.apache.spark.sql.SparkSession
-    val priorDefault = sess.getDefaultSession
-    val priorActive = sess.getActiveSession
-    sess.clearDefaultSession()
-    sess.clearActiveSession()
-    try {
-      val s2 = sess.builder()
-        .master("local[2]")
-        .appName("topk-sql")
-        .config("spark.sql.shuffle.partitions", "2")
-        .config("spark.ui.enabled", "false")
-        .withExtensions(new graft.core.GraftExtensions)
-        .getOrCreate()
-      import s2.implicits._
-      Seq((1, 3.0, 10L), (1, 8.0, 11L), (1, 5.0, 12L))
-        .toDF("g", "score", "id").createOrReplaceTempView("t")
-      val got = s2.sql(
-        "SELECT g, topk_ids(score, id, 2) AS top FROM t GROUP BY g")
-        .collect().map(r => r.getInt(0) -> r.getSeq[Long](1)).toMap
-      assert(got(1) == Seq(11L, 12L))
-    } finally {
-      priorDefault.foreach(sess.setDefaultSession)
-      priorActive.foreach(sess.setActiveSession)
-    }
+    Seq((1, 3.0, 10L), (1, 8.0, 11L), (1, 5.0, 12L))
+      .toDF("g", "score", "id").createOrReplaceTempView("topk_t")
+    val got = spark.sql(
+      "SELECT g, topk_ids(score, id, 2) AS top FROM topk_t GROUP BY g")
+      .collect().map(r => r.getInt(0) -> r.getSeq[Long](1)).toMap
+    assert(got(1) == Seq(11L, 12L))
   }
 }

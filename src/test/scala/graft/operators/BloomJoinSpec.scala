@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSuite
+import graft.core.GraftSession.withConf
 import graft.core.Tables
 import org.apache.spark.sql.functions._
 
@@ -15,14 +16,12 @@ import org.apache.spark.sql.functions._
 class BloomJoinSpec extends SparkSuite {
 
   test("selective dim join injects a bloom filter on the fact side") {
-    val confs = Seq(
+    withConf(spark,
       "spark.sql.autoBroadcastJoinThreshold" -> "-1", // force SMJ
       "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
       "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
-      "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "100MB")
-    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    try {
-      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "100MB"
+    ) {
       val li = Tables.lineitem(spark, sf001)
       val ords = Tables.orders(spark, sf001)
         .filter(col("o_orderpriority") === "1-URGENT")
@@ -34,9 +33,6 @@ class BloomJoinSpec extends SparkSuite {
       // and it must not have broken the result
       val n = joined.collect()
       assert(n.length == 1 && n(0).getString(0) == "1-URGENT")
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 }

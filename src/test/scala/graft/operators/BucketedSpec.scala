@@ -1,15 +1,14 @@
 package graft.operators
 
 import graft.SparkSuite
+import graft.core.GraftSession.withConf
 import graft.core.Tables
 import org.apache.spark.sql.functions._
 
 class BucketedSpec extends SparkSuite {
 
   test("bucketed join plan has no shuffle exchange on either join input") {
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val (ordersTbl, custTbl) = BucketedOps.ensureBucketed(spark, sf0001)
       val joined = spark.table(ordersTbl)
         .join(spark.table(custTbl).hint("merge"),
@@ -19,8 +18,6 @@ class BucketedSpec extends SparkSuite {
       assert(plan.contains("SortMergeJoin"), s"expected SMJ in:\n$plan")
       assert(!plan.contains("ShuffleExchange"),
         s"bucketed join should not shuffle:\n$plan")
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     }
   }
 

@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import graft.SparkSuite
+import graft.core.GraftSession.withConf
 import graft.core.Tables
 import org.apache.spark.sql.functions._
 
@@ -87,13 +88,8 @@ class PipelineSpec extends SparkSuite {
         .collect()
         .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
           r.getLong(3), r.getLong(4), r.getLong(5)))
-    val before = spark.conf.get("spark.sql.shuffle.partitions")
-    val at3 = try {
-      spark.conf.set("spark.sql.shuffle.partitions", "3"); run()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", before)
-    val at17 = try {
-      spark.conf.set("spark.sql.shuffle.partitions", "17"); run()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", before)
+    val at3 = withConf(spark, "spark.sql.shuffle.partitions" -> "3")(run())
+    val at17 = withConf(spark, "spark.sql.shuffle.partitions" -> "17")(run())
     assert(at3.nonEmpty && at3.toSeq == at17.toSeq)
 
     // globalized bin ids per language are dense 0..max and
@@ -315,12 +311,10 @@ class PipelineSpec extends SparkSuite {
     val sizes = out.groupBy(_._3).values.map(_.length)
     assert(sizes.max - sizes.min <= 1, s"unbalanced shards: $sizes")
     // parallelism invariance: same result at a different shuffle width
-    val before = spark.conf.get("spark.sql.shuffle.partitions")
-    val alt = try {
-      spark.conf.set("spark.sql.shuffle.partitions", "5")
+    val alt = withConf(spark, "spark.sql.shuffle.partitions" -> "5") {
       PipelineOps.globalShuffle(spark, sf0001).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    } finally spark.conf.set("spark.sql.shuffle.partitions", before)
+    }
     assert(alt.toSeq == out.toSeq)
   }
 

@@ -6,10 +6,7 @@ import org.apache.spark.sql.functions._
 class IntervalJoinSpec extends SparkSuite {
   import spark.implicits._
 
-  private def installed(): Unit = IntervalJoin.install(spark)
-
   test("hinted range join plans as IntervalJoinExec, unhinted does not") {
-    installed()
     val dim = spark.range(0, 100).select(col("id").as("bin"),
       (col("id") * 10.0).as("lo"), ((col("id") + 1) * 10.0).as("hi"))
     val fact = Seq(5.0, 15.0, 999.5).toDF("v")
@@ -24,7 +21,6 @@ class IntervalJoinSpec extends SparkSuite {
   }
 
   test("matches the brute-force join on overlapping intervals") {
-    installed()
     // overlapping dim: every v in [0,100) sits in ~3 intervals
     val dim = spark.range(0, 50).select(col("id").as("iid"),
       (col("id") * 2.0).as("lo"), (col("id") * 2.0 + 6.0).as("hi"))
@@ -44,7 +40,6 @@ class IntervalJoinSpec extends SparkSuite {
   }
 
   test("strictness variants and left-outer nulls behave correctly") {
-    installed()
     val dim = Seq((0, 0.0, 10.0), (1, 10.0, 20.0)).toDF("iid", "lo", "hi")
     val fact = Seq(10.0, 25.0).toDF("v")
     // closed-open [lo, hi): 10.0 belongs to interval 1 only
@@ -64,7 +59,6 @@ class IntervalJoinSpec extends SparkSuite {
   }
 
   test("-0.0 probe matches +0.0 bound exactly as the stock join does") {
-    installed()
     // Catalyst's >=/< treat -0.0 == 0.0 (SQLOrderingUtil); the exec
     // orders with the interpreted ordering, so -0.0 must land in the
     // [0.0, 10.0) interval — Double.compareTo would have dropped it.
@@ -80,7 +74,6 @@ class IntervalJoinSpec extends SparkSuite {
   }
 
   test("non-atomic (array) bounds fall back to the stock join") {
-    installed()
     val dim = Seq((0, Seq(0), Seq(9)), (1, Seq(10), Seq(19)))
       .toDF("iid", "lo", "hi")
     val fact = Seq(Seq(5), Seq(12)).toDF("v")
@@ -92,7 +85,6 @@ class IntervalJoinSpec extends SparkSuite {
   }
 
   test("merge-hinted dim plans the range-partitioned exec, no BNLJ") {
-    installed()
     val dim = spark.range(0, 5000).select(col("id").as("bin"),
       (col("id") * 10.0).as("lo"), ((col("id") + 1) * 10.0).as("hi"))
     val fact = Seq(5.0, 15.0, 49999.5).toDF("v")
@@ -106,7 +98,6 @@ class IntervalJoinSpec extends SparkSuite {
   }
 
   test("range-partitioned path matches brute force incl. spanning intervals") {
-    installed()
     // overlapping dim with a few WIDE intervals that straddle many range
     // buckets — exercises the replicate-to-every-overlapped-bucket path
     val dim = spark.range(0, 50).select(col("id").as("iid"),
@@ -130,7 +121,6 @@ class IntervalJoinSpec extends SparkSuite {
   }
 
   test("range-partitioned left-outer and strictness match the broadcast path") {
-    installed()
     val dim = Seq((0, 0.0, 10.0), (1, 10.0, 20.0)).toDF("iid", "lo", "hi")
     val fact = Seq(10.0, 25.0).toDF("v")
     def run(d: org.apache.spark.sql.DataFrame) =
@@ -143,7 +133,6 @@ class IntervalJoinSpec extends SparkSuite {
   }
 
   test("binned aggregate matches the arithmetic formulation on testdata") {
-    installed()
     val got = IntervalJoinQueries.q31IntervalJoin(spark, sf0001)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     val want = graft.core.Tables.orders(spark, sf0001)
